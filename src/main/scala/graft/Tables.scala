@@ -84,8 +84,10 @@ object Tables {
     val target = df.sparkSession.sparkContext.defaultParallelism
     val scanParts = try df.rdd.getNumPartitions catch { case NonFatal(_) => target }
     if (scanParts >= target) return df
-    val maxBytesPerCore = sys.env.getOrElse(
-      "SPARK_GRAFT_FLOOR_MAX_MB_PER_CORE", "64").toLong * 1024L * 1024L
+    // a malformed value falls back to the default instead of failing the load
+    val maxBytesPerCore = sys.env.get("SPARK_GRAFT_FLOOR_MAX_MB_PER_CORE")
+      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
+      .getOrElse(64L) * 1024L * 1024L
     val scanBytes =
       try df.queryExecution.optimizedPlan.stats.sizeInBytes
       catch { case NonFatal(_) => BigInt(0) }

@@ -100,8 +100,16 @@ object Json {
   def str(s: String): JsonString = JsonString(s)
   def arr(items: JsonValue*): JsonArray = JsonArray(items.toVector)
 
+  /** Deepest array/object nesting [[parse]] accepts (Jackson's default
+    * limit). The parser recurses once per level, so without a bound a
+    * few thousand `[` in one ping overflow the task's stack, and a
+    * StackOverflowError is fatal: no lenient catch may swallow it.
+    */
+  val MaxDepth = 1000
+
   /** Parse or throw IllegalArgumentException (caller decides leniency —
     * the reference drops unparseable pings in its flatMap try/catch).
+    * Nesting deeper than [[MaxDepth]] is malformed input like any other.
     */
   def parse(text: String): JsonValue = {
     val p = new Parser(text)
@@ -116,6 +124,7 @@ object Json {
 
   private final class Parser(s: String) {
     var pos = 0
+    private var depth = 0
     def atEnd: Boolean = pos >= s.length
     def skipWs(): Unit =
       while (!atEnd && (s.charAt(pos) == ' ' || s.charAt(pos) == '\t' ||
@@ -126,13 +135,18 @@ object Json {
       if (atEnd || s.charAt(pos) != c) fail(s"expected '$c'")
       pos += 1
     }
+    /** Counts one level of nesting in; the caller counts it out. */
+    private def enter(): Unit = {
+      depth += 1
+      if (depth > MaxDepth) fail(s"nesting deeper than $MaxDepth")
+    }
 
     def parseValue(): JsonValue = {
       skipWs()
       if (atEnd) fail("unexpected end")
       s.charAt(pos) match {
-        case '{' => parseObject()
-        case '[' => parseArray()
+        case '{' => enter(); val o = parseObject(); depth -= 1; o
+        case '[' => enter(); val a = parseArray(); depth -= 1; a
         case '"' => JsonString(parseString())
         case 't' => parseLiteral("true", JsonBool(true))
         case 'f' => parseLiteral("false", JsonBool(false))

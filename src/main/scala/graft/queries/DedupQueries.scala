@@ -30,7 +30,9 @@ private[queries] trait DedupQueries {
     * passes a relation whose width is fixed (few longs per row) and
     * whose row count is corpus-sublinear or corpus-linear × small
     * constant — never payload bytes. SPARK_GRAFT_MAT_SHARED=0 restores
-    * the lazy plan for A/B measurement.
+    * the lazy plan for A/B measurement. The eager checkpoint runs a job
+    * when the DataFrame is built, so its callers (q123, q126, q137)
+    * execute even when they are only planned or explained.
     */
   private def matSharedLeg(df: DataFrame): DataFrame =
     if (sys.env.getOrElse("SPARK_GRAFT_MAT_SHARED", "1") == "0") df

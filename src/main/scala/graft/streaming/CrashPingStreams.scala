@@ -5,6 +5,7 @@ import graft.sinks.{BatchHttpSink, HttpSink}
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 import scala.collection.immutable.ListMap
+import scala.util.control.NonFatal
 
 /** Crash-ping → monitoring-line pipelines (reference:
   * src/main/scala/com/mozilla/telemetry/streaming/CrashPingStreamingBase.scala:172-225
@@ -66,7 +67,7 @@ trait CrashPingStreamBase extends Serializable {
     pings.flatMap { v =>
       try parsePing(Envelope.parseFrom(v.getAs[Array[Byte]](0)), channels, appNames,
         measurementName, signatureProvider)
-      catch { case _: Throwable if !raiseOnError => None }
+      catch { case NonFatal(_) if !raiseOnError => None }
     }
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 
 import java.sql.Timestamp
+import scala.util.control.NonFatal
 
 /** Error-aggregates pipeline: binary envelopes → parse/validate/fan-out →
   * 5-minute event-time windows → multi-column SUM, composed over
@@ -34,75 +35,88 @@ abstract class ErrorAggregatorBase extends Serializable {
   val coreFennecPingAllowedOses: List[String] = List("Android")
   val disallowedChannels: List[String] = List("Other")
 
-  final def statsSchema: StructType =
+  final lazy val statsSchema: StructType =
     SchemaBuilder.merge(metricsSchema, countHistogramErrorsSchema)
 
-  final def mergedSchema: StructType =
+  final lazy val mergedSchema: StructType =
     SchemaBuilder.merge(dimensionsSchema, statsSchema)
 
-  /** One dimensions row per experiment, incl. the null-experiment row
+  /** A row builder over [[mergedSchema]] holding the ping's dimensions
+    * and its count of 1, built once per ping; `buildId` is the
+    * normalized build id the caller has already checked
     * (reference: ErrorAggregatorBase.scala:258-280).
     */
-  private[streaming] def buildDimensions(ping: TelemetryPing): Array[Row] = {
+  private def pingRow(ping: TelemetryPing, buildId: Option[String]): RowBuilder = {
     val meta = ping.meta
-    ping.getExperiments.map { case (experimentId, experimentBranch) =>
-      val dims = new RowBuilder(dimensionsSchema)
-      dims("timestamp") = Some(meta.normalizedTimestamp)
-      dims("submission_date_s3") = Some(ErrorAggregator.timestampToDateString(meta.normalizedTimestamp))
-      dims("channel") = Some(meta.normalizedChannel)
-      dims("version") = ping.getVersion
-      dims("display_version") = ping.getDisplayVersion
-      dims("build_id") = ping.getNormalizedBuildId
-      dims("application") = Some(meta.appName)
-      dims("os_name") = ping.getOsName
-      dims("os_version") = ping.getOsVersion
-      dims("architecture") = ping.getArchitecture
-      dims("country") = meta.geoCountry
-      dims("experiment_id") = experimentId
-      dims("experiment_branch") = experimentBranch
-      dims.build
-    }
+    val timestamp = meta.normalizedTimestamp
+    val row = new RowBuilder(mergedSchema)
+    row("timestamp") = Some(timestamp)
+    row("submission_date_s3") = Some(ErrorAggregator.timestampToDateString(timestamp))
+    row("channel") = Some(meta.normalizedChannel)
+    row("version") = ping.getVersion
+    row("display_version") = ping.getDisplayVersion
+    row("build_id") = buildId
+    row("application") = Some(meta.appName)
+    row("os_name") = ping.getOsName
+    row("os_version") = ping.getOsVersion
+    row("architecture") = ping.getArchitecture
+    row("country") = meta.geoCountry
+    row("count") = Some(1)
+    row
   }
 
-  private[streaming] def parseCrash(ping: CrashPing): Array[Row] = {
+  /** One output row per experiment, incl. the null-experiment row: the
+    * ping's dimensions and stats, copied with each experiment's fields.
+    */
+  private def perExperiment(ping: TelemetryPing, row: RowBuilder): Array[Row] =
+    ping.getExperiments.map { case (experimentId, experimentBranch) =>
+      row("experiment_id") = experimentId
+      row("experiment_branch") = experimentBranch
+      row.build
+    }
+
+  private[streaming] def parseCrash(ping: CrashPing, buildId: Option[String]): Array[Row] = {
     if (!(ping.isMainCrash || ping.isContentCrash)) {
       // Other crash kinds are already counted from main pings.
       throw new IllegalArgumentException("Only main and content crash pings are allowed")
     }
-    val stats = new RowBuilder(statsSchema)
-    stats("count") = Some(1)
+    val row = pingRow(ping, buildId)
     if (ping.isMainCrash) {
-      stats("main_crashes") = Some(1)
-      stats("startup_crashes") = if (ping.isStartupCrash) Some(1) else None
+      row("main_crashes") = Some(1)
+      row("startup_crashes") = if (ping.isStartupCrash) Some(1) else None
     } else if (ping.isContentShutdownCrash) {
-      stats("content_shutdown_crashes") = Some(1)
+      row("content_shutdown_crashes") = Some(1)
     } else {
-      stats("content_crashes") = Some(1)
+      row("content_crashes") = Some(1)
     }
-    buildDimensions(ping).map(RowBuilder.merge(_, stats.build))
+    perExperiment(ping, row)
   }
 
-  private[streaming] def parseMain(ping: MainPing): Array[Row] = {
+  private[streaming] def parseMain(ping: MainPing, buildId: Option[String]): Array[Row] = {
     val usageHours = ping.usageHours
     // A main ping without usage hours carries no usable signal — drop.
     if (usageHours.isEmpty) throw new IllegalArgumentException("Main ping without usage hours")
-    val stats = new RowBuilder(statsSchema)
-    stats("count") = Some(1)
-    stats("usage_hours") = usageHours
+    val row = pingRow(ping, buildId)
+    row("usage_hours") = usageHours
     countHistogramErrorsSchema.fieldNames.foreach { h =>
-      stats(h) = ping.getCountHistogramValue(h)
+      row(h) = ping.getCountHistogramValue(h)
     }
-    stats("gpu_crashes") = ping.getCountKeyedHistogramValue("SUBPROCESS_CRASHES_WITH_DUMP", "gpu")
-    stats("plugin_crashes") = ping.getCountKeyedHistogramValue("SUBPROCESS_CRASHES_WITH_DUMP", "plugin")
-    stats("gmplugin_crashes") = ping.getCountKeyedHistogramValue("SUBPROCESS_CRASHES_WITH_DUMP", "gmplugin")
-    buildDimensions(ping).map(RowBuilder.merge(_, stats.build))
+    row("gpu_crashes") = ping.getCountKeyedHistogramValue("SUBPROCESS_CRASHES_WITH_DUMP", "gpu")
+    row("plugin_crashes") = ping.getCountKeyedHistogramValue("SUBPROCESS_CRASHES_WITH_DUMP", "plugin")
+    row("gmplugin_crashes") = ping.getCountKeyedHistogramValue("SUBPROCESS_CRASHES_WITH_DUMP", "gmplugin")
+    perExperiment(ping, row)
   }
 
-  private[streaming] def parseCore(ping: CorePing): Array[Row] = {
-    val stats = new RowBuilder(statsSchema)
-    stats("count") = Some(1)
-    stats("usage_hours") = ping.usageHours
-    buildDimensions(ping).map(RowBuilder.merge(_, stats.build))
+  private[streaming] def parseCore(ping: CorePing, buildId: Option[String]): Array[Row] = {
+    val row = pingRow(ping, buildId)
+    row("usage_hours") = ping.usageHours
+    perExperiment(ping, row)
+  }
+
+  private def checkedBuildId(ping: TelemetryPing): Option[String] = {
+    val buildId = ping.getNormalizedBuildId
+    if (buildId.isEmpty) throw new IllegalArgumentException("Empty buildId")
+    buildId
   }
 
   /** Decode + allow-list validation + per-doctype dispatch
@@ -125,20 +139,17 @@ abstract class ErrorAggregatorBase extends Serializable {
     docType match {
       case "crash" =>
         val ping = CrashPing.fromEnvelope(env)
-        if (ping.getNormalizedBuildId.isEmpty) throw new IllegalArgumentException("Empty buildId")
-        parseCrash(ping)
+        parseCrash(ping, checkedBuildId(ping))
       case "core" =>
         val ping = CorePing.fromEnvelope(env)
         if (!ping.os.exists(coreFennecPingAllowedOses.contains)) {
           throw new IllegalArgumentException(
             s"OS for core pings should be one of ${coreFennecPingAllowedOses.mkString(",")}")
         }
-        if (ping.getNormalizedBuildId.isEmpty) throw new IllegalArgumentException("Empty buildId")
-        parseCore(ping)
+        parseCore(ping, checkedBuildId(ping))
       case _ =>
         val ping = MainPing.fromEnvelope(env)
-        if (ping.getNormalizedBuildId.isEmpty) throw new IllegalArgumentException("Empty buildId")
-        parseMain(ping)
+        parseMain(ping, checkedBuildId(ping))
     }
   }
 
@@ -147,7 +158,7 @@ abstract class ErrorAggregatorBase extends Serializable {
     val encoder = Encoders.row(mergedSchema)
     val parsed = pings.flatMap { v =>
       try parseEnvelope(v.getAs[Array[Byte]](0))
-      catch { case _: Throwable if !raiseOnError => Array.empty[Row] }
+      catch { case NonFatal(_) if !raiseOnError => Array.empty[Row] }
     }(encoder)
 
     val dimensionsCols = List(

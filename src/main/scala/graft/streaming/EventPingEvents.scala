@@ -3,6 +3,8 @@ package graft.streaming
 import graft.pings.{Envelope, EventPing}
 import org.apache.spark.sql.{DataFrame, Dataset}
 
+import scala.util.control.NonFatal
+
 /** Event-ping explode: one typed output row per event per process
   * (reference: src/main/scala/com/mozilla/telemetry/streaming/EventPingEvents.scala:107-148).
   *
@@ -63,7 +65,7 @@ object EventPingEvents {
           }
         }
       } catch {
-        case _: Throwable => Seq.empty[EventRow]
+        case NonFatal(_) => Seq.empty[EventRow]
       }
     }
   }

@@ -5,6 +5,8 @@ import graft.pings.Envelope
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.{DataFrame, Dataset}
 
+import scala.util.control.NonFatal
+
 /** Config-driven event forwarding (reference:
   * src/main/scala/com/mozilla/telemetry/streaming/EventsToAmplitude.scala:146-181).
   *
@@ -32,7 +34,7 @@ object EventsToAmplitude {
     import pings.sparkSession.implicits._
     pings.flatMap { v =>
       try parsePing(Envelope.parseFrom(v.getAs[Array[Byte]](0)), sample, config)
-      catch { case _: Throwable if !raiseOnError => Seq.empty[KeyedAmplitudePayload] }
+      catch { case NonFatal(_) if !raiseOnError => Seq.empty[KeyedAmplitudePayload] }
     }
   }
 

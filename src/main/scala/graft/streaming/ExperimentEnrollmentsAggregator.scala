@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
+import scala.util.control.NonFatal
 
 /** Experiment enrollment/unenrollment counts per 5-minute window —
   * normandy events from main + event pings, conditional `count(when(...))`
@@ -13,8 +14,8 @@ import java.sql.Timestamp
   */
 object ExperimentEnrollmentsAggregator {
 
-  private val allowedDocTypes = List("main", "event")
-  private val allowedAppNames = List("Firefox")
+  private[streaming] val allowedDocTypes = List("main", "event")
+  private[streaming] val allowedAppNames = List("Firefox")
 
   case class ExperimentEnrollmentEvent(
       method: String, // enroll/unenroll
@@ -52,7 +53,7 @@ object ExperimentEnrollmentsAggregator {
     import messages.sparkSession.implicits._
     val events = messages.flatMap { v =>
       try extractEnrollmentEvents(v.getAs[Array[Byte]](0))
-      catch { case _: Throwable => Seq.empty[ExperimentEnrollmentEvent] }
+      catch { case NonFatal(_) => Seq.empty[ExperimentEnrollmentEvent] }
     }
     events
       .withWatermark("timestamp", "1 minute")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 
 import java.sql.Timestamp
 import scala.collection.immutable.ListMap
+import scala.util.control.NonFatal
 
 /** Enrollment aggregates as JSON rows for the TestTube HTTP sink: the
   * 7-method conditional-count variant with `object`→`type` rename and
@@ -30,7 +31,7 @@ object ExperimentEnrollmentsToTestTube {
     import messages.sparkSession.implicits._
     val events = messages.flatMap { v =>
       try ExperimentEnrollmentsAggregator.extractEnrollmentEvents(v.getAs[Array[Byte]](0))
-      catch { case _: Throwable => Seq.empty[ExperimentEnrollmentsAggregator.ExperimentEnrollmentEvent] }
+      catch { case NonFatal(_) => Seq.empty[ExperimentEnrollmentsAggregator.ExperimentEnrollmentEvent] }
     }
     val countCols = Methods.map { case (method, alias) =>
       count(when($"method" === method, 1)).alias(alias)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 import java.sql.Timestamp
+import scala.util.control.NonFatal
 
 /** Injectable processing-time clock (reference keeps the same seam for
   * testability — FederatedLearningSearchOptimizer.scala:77).
@@ -54,7 +55,7 @@ object FrecencyAggregator {
           else None
         }
       } catch {
-        case _: Throwable if !raiseOnError => None
+        case NonFatal(_) if !raiseOnError => None
       }
     }
 

@@ -68,7 +68,12 @@ object Jobs {
   }
 
   /** Shared dual-mode driver: `transform` is the pipeline's aggregate,
-    * applied unchanged in both modes.
+    * applied unchanged in both modes. Batch mode reads only the
+    * `docTypes` × `appNames` directories of each day: the store's
+    * partition values are the same envelope fields the transform's
+    * allow-list checks, so the output is the same, and envelopes the
+    * transform would drop are never read or decoded. The transform keeps
+    * its own checks for the Kafka path, which has no partitions.
     */
   private def runDualMode(
       job: StreamingJobBase,
@@ -76,7 +81,9 @@ object Jobs {
       spark: SparkSession,
       transform: DataFrame => DataFrame,
       partitionColumns: Seq[String],
-      consumerCacheCapacity: Int): Unit = {
+      consumerCacheCapacity: Int,
+      docTypes: Seq[String],
+      appNames: Seq[String]): Unit = {
     val outputPath = opts.getOrElse("outputPath", "/tmp/parquet")
     if (opts.isStreaming) {
       startStreamingQuery(job, opts, transform, partitionColumns,
@@ -86,7 +93,8 @@ object Jobs {
       val envelopeDir = opts.get("envelopeDir")
         .getOrElse(throw new IllegalArgumentException("--envelopeDir required in batch mode"))
       job.datesBetween(opts.from.get, opts.to).foreach { date =>
-        val pings = EnvelopeStore.read(spark, envelopeDir, submissionDate = Some(date))
+        val pings = EnvelopeStore.read(spark, envelopeDir,
+          submissionDate = Some(date), docTypes = docTypes, appNames = appNames)
         transform(pings)
           .repartition(opts.numParquetFiles)
           .write
@@ -108,7 +116,8 @@ object Jobs {
     def run(spark: SparkSession, opts: JobOpts): Unit =
       runDualMode(ErrorAggregatorJobDef, opts, spark,
         df => ErrorAggregator.aggregate(df, opts.raiseOnError),
-        Seq("submission_date_s3"), consumerCacheCapacity = 1000)
+        Seq("submission_date_s3"), consumerCacheCapacity = 1000,
+        ErrorAggregator.allowedDocTypes, ErrorAggregator.allowedAppNames)
     /** The real streaming job (same transform, sink, partitioning, and
       * checkpoint wiring as [[run]]'s streaming branch) over an injected
       * source — see [[Jobs.startStreamingQuery]].
@@ -183,7 +192,8 @@ object Jobs {
     def run(spark: SparkSession, opts: JobOpts): Unit =
       runDualMode(EnrollmentsJobDef, opts, spark,
         df => ExperimentEnrollmentsAggregator.aggregate(df),
-        Seq("submission_date_s3"), consumerCacheCapacity = 100)
+        Seq("submission_date_s3"), consumerCacheCapacity = 100,
+        ExperimentEnrollmentsAggregator.allowedDocTypes, ExperimentEnrollmentsAggregator.allowedAppNames)
   }
   private object EnrollmentsJobDef extends StreamingJobBase {
     override val JobName = "experiment_enrollments_aggregator"

@@ -66,6 +66,7 @@ abstract class StreamingJobBase extends Serializable {
       // (HotSpot DontCompileHugeMethods) and run interpreted — fall back
       // to the non-codegen path instead of hitting that cliff
       .config("spark.sql.codegen.hugeMethodLimit", "8000")
+      .config("spark.sql.files.openCostInBytes", StreamingJobBase.FileOpenCostBytes.toString)
     StreamingJobBase.rocksDbStateConfs(rocksDbState)
       .foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
       .getOrCreate()
@@ -76,6 +77,21 @@ object StreamingJobBase {
   val DateFormat = "yyyyMMdd"
   val DateFormatter: DateTimeFormatter = DateTimeFormatter.ofPattern(DateFormat)
   val TelemetryKafkaTopic = "telemetry"
+
+  /** What opening one file is worth in scan splitting, in bytes of
+    * input. Spark packs files into splits of at most
+    * `max(openCost, (bytes + files × openCost) / cores)`, largest first;
+    * its 4 MB default is tuned for scans whose per-row cost is small.
+    * Envelope scans are decode-bound instead: ~60 µs of closure per
+    * envelope at ~230 B of snappy parquet each, so a file open costs
+    * what decoding a few KB does. At 4 MB a 40-file day packs into one
+    * ~41 MB split, and its four ~0.8 MB main-ping files all land in one
+    * task that decodes 82% of the day while the other cores idle; at
+    * 8 KB each large file gets its own split and the small ones share
+    * one. Files that are already one-per-task (the streaming file
+    * source's ~115 KB trigger files) stay one-per-task.
+    */
+  val FileOpenCostBytes: Long = 8L * 1024
 
   /** Strict truthy parse for env toggles: only 1/true/yes/on enable.
     * (`_ != "false"` would read `GRAFT_ROCKSDB_STATE=0` as ENABLED and

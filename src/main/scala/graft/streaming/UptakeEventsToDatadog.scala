@@ -5,6 +5,7 @@ import graft.pings.{Envelope, EventPing, MainPing}
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 import scala.util.Try
+import scala.util.control.NonFatal
 
 /** Normandy/uptake events → DogStatsD counters and timers (reference:
   * src/main/scala/com/mozilla/telemetry/streaming/UptakeEventsToDatadog.scala:59-114).
@@ -54,7 +55,7 @@ object UptakeEventsToDatadog {
           normandyCounters ++ uptakeMetrics
         }
       } catch {
-        case _: Throwable if !raiseOnError => empty
+        case NonFatal(_) if !raiseOnError => empty
       }
     }
   }

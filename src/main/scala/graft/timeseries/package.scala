@@ -57,8 +57,9 @@ package object timeseries {
   }
 
   /** Assembles a positional [[Row]] for `schema` from name-keyed updates.
-    * Unset and `None`-valued slots stay null; names outside the schema
-    * are ignored unless `failOnMissingField`.
+    * Unset slots are null and `None` sets a slot back to null, so one
+    * builder can `build` several rows that differ in a few fields; names
+    * outside the schema are ignored unless `failOnMissingField`.
     */
   final class RowBuilder(schema: StructType, failOnMissingField: Boolean = false)
       extends Serializable {
@@ -68,17 +69,12 @@ package object timeseries {
 
     def update(name: String, value: Option[Any]): Unit = {
       val i = index.getOrElse(name, -1)
-      if (i >= 0) value.foreach(slots(i) = _)
+      if (i >= 0) slots(i) = value.orNull
       else if (failOnMissingField)
         throw new IllegalArgumentException(
           s"""Field "$name" does not exist in schema ${schema.fieldNames.mkString("[", ", ", "]")}""")
     }
 
     def build: Row = Row.fromSeq(slots.toIndexedSeq)
-  }
-
-  object RowBuilder {
-    /** Positional concatenation — pairs a dimensions row with a stats row. */
-    def merge(a: Row, b: Row): Row = Row.fromSeq(a.toSeq ++ b.toSeq)
   }
 }

@@ -40,6 +40,20 @@ class JsonSpec extends AnyFunSuite {
     assert(Json.parseOption("").isEmpty)
   }
 
+  test("nesting past the depth limit is malformed input, not a stack overflow") {
+    val deep = "[" * 5000 + "]" * 5000
+    intercept[IllegalArgumentException](Json.parse(deep))
+    assert(Json.parseOption(deep).isEmpty)
+    assert(Json.parseOption("""{"a":""" * 5000 + "1" + "}" * 5000).isEmpty)
+    // the limit itself still parses; one level more does not
+    val atLimit = "[" * Json.MaxDepth + "]" * Json.MaxDepth
+    assert(Json.parse(atLimit).asArray.isDefined)
+    intercept[IllegalArgumentException](Json.parse("[" + atLimit + "]"))
+    // depth counts nesting, not how many containers a document holds
+    assert(Json.parse(Seq.fill(3 * Json.MaxDepth)("[[]]").mkString("[", ",", "]"))
+      .asArray.map(_.length).contains(3 * Json.MaxDepth))
+  }
+
   test("numbers follow the JSON grammar strictly") {
     // a digit is required after '-', '.', and the exponent marker
     assert(Json.parseOption("-").isEmpty)

@@ -88,6 +88,21 @@ class ErrorAggregatorSpec extends AnyFunSuite with SparkTest {
     }
   }
 
+  test("an envelope nested past the JSON depth limit drops when lenient and raises when strict") {
+    import spark.implicits._
+    val valid = TestMessages.crashMessages(2).map(_.toBytes)
+    val deep = ("""{"fields":{"docType":"crash","x":""" + "[" * 5000 + "]" * 5000 +
+      """},"timestamp":1,"payload":null}""").getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val mixed = spark.createDataset(valid :+ deep).toDF("value")
+    val lenient = ErrorAggregator.aggregate(mixed).collect()
+    assert(lenient.filter(_.isNullAt(lenient.head.fieldIndex("experiment_id")))
+      .map(_.getAs[Long]("main_crashes")).sum == 2L)
+    val e = intercept[Exception](ErrorAggregator.aggregate(mixed, raiseOnError = true).count())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.toString).toSeq
+    assert(messages.exists(m => m.contains("IllegalArgumentException") && m.contains("nesting deeper than")),
+      messages.mkString("\n"))
+  }
+
   test("normalizes os_version") {
     val messages = TestMessages.mainMessages(1, Map(
       "environment.system" -> Json.str("""{"os": {"name": "linux", "version": "10.2.42-hello"}}""")))

@@ -1,14 +1,26 @@
 package graft.streaming
 
 import graft.SparkTest
+import graft.json.Json
 import graft.monitoring.AccumulatorMetrics
 import graft.pings.TestMessages
 import graft.sinks.{DogStatsDMetricSink, HttpSink, RecordingTransport, StringHttpSink}
 import graft.sources.EnvelopeStore
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.net.DatagramSocket
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+
+import StreamingJobBase.JobOpts
 
 class JobsSpec extends AnyFunSuite with SparkTest {
 
@@ -33,6 +45,78 @@ class JobsSpec extends AnyFunSuite with SparkTest {
 
     assert(EnvelopeStore.read(spark, dir, docTypes = Seq("event")).count() == 3)
     assert(EnvelopeStore.read(spark, dir, submissionDate = Some("19990101")).count() == 0)
+  }
+
+  test("a day's read lists only that day; a day with no directory reads as zero rows") {
+    val dir = Files.createTempDirectory("envdays").toString
+    EnvelopeStore.write(spark, TestMessages.crashMessages(2) ++
+      TestMessages.crashMessages(3, Map("submissionDate" -> Json.str("20170102"))), dir)
+    val day = EnvelopeStore.read(spark, dir, submissionDate = Some("20170101"))
+    assert(day.count() == 2)
+    // the relation's file index holds only the requested day's files
+    assert(day.inputFiles.nonEmpty &&
+      day.inputFiles.forall(_.contains("submission_date_s3=20170101/")), day.inputFiles.toSeq)
+    assert(EnvelopeStore.read(spark, dir, submissionDate = Some("20170102"), docTypes = Seq("crash")).count() == 3)
+    val noDay = EnvelopeStore.read(spark, dir, submissionDate = Some("19990101"), docTypes = Seq("crash"))
+    assert(noDay.count() == 0 && noDay.columns.toSeq == Seq("value"))
+    // a store root that does not exist is a misconfiguration, not an empty day
+    intercept[AnalysisException](
+      EnvelopeStore.read(spark, s"$dir/missing", submissionDate = Some("20170101")))
+  }
+
+  test("batch jobs read only their allow-listed partitions and emit the same rows") {
+    import spark.implicits._
+    val envDir = Files.createTempDirectory("envallow").toString
+    val envelopes = TestMessages.crashMessages(4) ++ TestMessages.mainMessages(2) ++
+      TestMessages.coreMessages(2) ++ TestMessages.eventMessages(3) ++
+      // directories neither job may read: another doc type, another app
+      TestMessages.mainMessages(2, Map("docType" -> Json.str("sync"))) ++
+      TestMessages.mainMessages(2, Map("appName" -> Json.str("Chrome")))
+    EnvelopeStore.write(spark, envelopes, envDir)
+    val unpruned = spark.createDataset(envelopes.map(_.toBytes)).toDF("value")
+
+    // (output path, partition filters of each scan under that write)
+    val scans = new ConcurrentLinkedQueue[(String, String)]
+    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      // the write runs inside an adaptive plan: walk its query stages
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        collect(qe.executedPlan) {
+          case DataWritingCommandExec(cmd: InsertIntoHadoopFsRelationCommand, child) =>
+            collect(child) { case scan: FileSourceScanExec => scan.partitionFilters.map(_.sql).mkString(" AND ") }
+              .foreach(filters => scans.add(cmd.outputPath.toString -> filters))
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    def check(jobName: String, prefix: String, run: JobOpts => Unit, expected: DataFrame,
+              docTypes: Seq[String], appNames: Seq[String]): Unit = {
+      val outDir = Files.createTempDirectory("allowout").toString
+      run(StreamingJobBase.parseOpts(jobName, Array(
+        "--from", "20170101", "--to", "20170101",
+        "--envelopeDir", envDir, "--outputPath", outDir, "--numParquetFiles", "1")))
+      val out = spark.read.parquet(s"$outDir/$prefix")
+        .withColumn("submission_date_s3", col("submission_date_s3").cast("string"))
+        .select(expected.columns.map(col): _*)
+      val want = expected.collect().map(_.toString).sorted.toSeq
+      assert(want.nonEmpty)
+      assert(out.collect().map(_.toString).sorted.toSeq == want)
+      // listener delivery is async relative to the write
+      def filters = scans.asScala.collect { case (path, f) if path.endsWith(s"$outDir/$prefix") => f }.toSeq
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (filters.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(filters.size == 1, s"expected one envelope scan under the write, got $filters")
+      val pruning = filters.head
+      assert(pruning.contains("doc_type") && pruning.contains("app_name"), pruning)
+      (docTypes ++ appNames).foreach(v => assert(pruning.contains(s"'$v'"), pruning))
+    }
+
+    spark.listenerManager.register(listener)
+    try {
+      check("error_aggregator", "error_aggregator/v2", Jobs.ErrorAggregatorJob.run(spark, _),
+        ErrorAggregator.aggregate(unpruned), Seq("main", "crash", "core"), Seq("Firefox", "Fennec"))
+      check("experiment_enrollments_aggregator", "experiment_enrollments/v1",
+        Jobs.ExperimentEnrollmentsJob.run(spark, _),
+        ExperimentEnrollmentsAggregator.aggregate(unpruned), Seq("main", "event"), Seq("Firefox"))
+    } finally spark.listenerManager.unregister(listener)
   }
 
   test("error aggregator batch job runs the per-day loop end to end") {

@@ -46,17 +46,17 @@ class TimeseriesSpec extends AnyFunSuite {
     val row = rb.build
     assert(row.getString(0) == "hello")
     assert(row.isNullAt(1) && row.isNullAt(2))
+    // a reused builder: None clears what an earlier row set
+    rb.update("a", None)
+    rb.update("c", Some(3L))
+    val next = rb.build
+    assert(next.isNullAt(0) && next.getLong(2) == 3L)
+    assert(row.getString(0) == "hello", "built rows do not share the builder's slots")
   }
 
   test("RowBuilder strict mode throws on unknown field names") {
     val rb = new RowBuilder(new SchemaBuilder().add[String]("a").build,
       failOnMissingField = true)
     intercept[IllegalArgumentException] { rb.update("missing", Some("v")) }
-  }
-
-  test("RowBuilder.merge concatenates rows positionally") {
-    val merged = RowBuilder.merge(
-      org.apache.spark.sql.Row("x", 1), org.apache.spark.sql.Row(2L))
-    assert(merged.toSeq == Seq("x", 1, 2L))
   }
 }
