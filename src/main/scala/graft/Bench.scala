@@ -1,57 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle partitions default to the core count (right for the
-    // sf0.1 graded sweep) but are overridable for scale-gate sweeps:
-    // at sf10 a 32-partition shuffle hands each task ~30× the state of
-    // the graded scale and the widest hash-agg/sort pages outgrow task
-    // memory (observed: a 7.5 GB single-page allocation failure). More
-    // partitions is the knob a real cluster would turn — AQE coalesces
-    // any that turn out small, so oversizing is cheap.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // HotSpot never JIT-compiles methods over 8000 bytecodes
-      // (DontCompileHugeMethods), so a generated whole-stage method past
-      // that limit runs INTERPRETED forever — observed as sporadic 20×
-      // stalls on the widest codegen stages (cube/rollup + decimal
-      // sums). Below the limit Spark falls back to the still-compiled
-      // non-codegen path: slightly slower best case, no interpreter
-      // cliff.
-      .config("spark.sql.codegen.hugeMethodLimit",
-        sys.env.getOrElse("SPARK_GRAFT_HUGE_METHOD_LIMIT", "8000"))
-      // Split sizing stays at the Spark defaults (128 MB
-      // maxPartitionBytes / 4 MB open cost). An A/B at sf1/sf10 (round
-      // 13) tested 16 MB/1 MB against the small-file bench corpora on
-      // the split-packing theory for a slow sweep; the measured effect
-      // was inside the ±20% same-day host swing (median 1.2× SLOWER at
-      // sf10, 1.2× faster on one isolated q01) — the swing, not split
-      // packing, explains cross-run drift, so the defaults stand and
-      // SPARK_GRAFT_MAX_PARTITION_BYTES stays available for real
-      // cluster-side tuning.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"))
-      // Optimization guide §3.1/§9: let the planner pick shuffled-hash
-      // join when its size conditions hold instead of defaulting to
-      // sort-merge — hashing the smaller per-partition side skips both
-      // sorts. Scale-neutral: the planner still requires the build side
-      // to fit per-partition, and AQE re-plans oversized partitions;
-      // env-parameterised for A/B (SPARK_GRAFT_PREFER_SMJ=true restores
-      // the Spark default).
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.queryPack("graft-bench")
     // untimed warmup: JVM/codegen/parquet-reader init should not be
     // attributed to whichever query happens to run first. The data is
     // small enough (tens of MB) that per-query time is dominated by

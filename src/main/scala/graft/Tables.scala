@@ -41,8 +41,7 @@ object Tables {
     * small files the same floor kicks in, which is exactly what a user
     * would hand-write. Filter/column pushdown still reaches the scan
     * (Catalyst pushes predicates and pruning through Repartition), so
-    * PushedFilters/ReadSchema are unaffected. Disable with
-    * SPARK_GRAFT_SCAN_FLOOR=0 for A/B measurement.
+    * PushedFilters/ReadSchema are unaffected.
     *
     * Applied where the consumers are COMPUTE-BOUND per row: always for
     * `embeddings` (64-dim float math dominates; measured q132 1.97→1.61,
@@ -63,10 +62,7 @@ object Tables {
     * projection, 7.5→15.4 s — fixed per-consumer by opting q93 out).
     * The guardrail here bounds the move cost for the consumers that DO
     * opt in: the floor only fires when the estimated scan bytes per
-    * core stay under SPARK_GRAFT_FLOOR_MAX_MB_PER_CORE (default 64 MB —
-    * one round-robin move of ≤64 MB/core is seconds of wire time,
-    * always recovered by a compute-bound consumer; sf10 embeddings is
-    * ~3 MB/core, three orders of magnitude inside the bound). Above
+    * core stay under [[FloorMaxBytesPerCore]]. Above
     * the bound the right production repair is re-laying out the table
     * (more row groups at the source), not a silent full-table exchange
     * in every reader — the floor declines and the plan is unchanged.
@@ -80,19 +76,21 @@ object Tables {
     */
   private def scanParallelFloor(df: DataFrame): DataFrame = {
     import scala.util.control.NonFatal
-    if (sys.env.getOrElse("SPARK_GRAFT_SCAN_FLOOR", "1") == "0") return df
     val target = df.sparkSession.sparkContext.defaultParallelism
     val scanParts = try df.rdd.getNumPartitions catch { case NonFatal(_) => target }
     if (scanParts >= target) return df
-    // a malformed value falls back to the default instead of failing the load
-    val maxBytesPerCore = sys.env.get("SPARK_GRAFT_FLOOR_MAX_MB_PER_CORE")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .getOrElse(64L) * 1024L * 1024L
     val scanBytes =
       try df.queryExecution.optimizedPlan.stats.sizeInBytes
       catch { case NonFatal(_) => BigInt(0) }
-    if (scanBytes / target <= maxBytesPerCore) df.repartition(target) else df
+    if (scanBytes / target <= FloorMaxBytesPerCore) df.repartition(target) else df
   }
+
+  /** The scan floor's move-cost bound: one round-robin move of ≤64
+    * MB/core is seconds of wire time, always recovered by a
+    * compute-bound consumer; sf10 embeddings is ~3 MB/core, three orders
+    * of magnitude inside the bound.
+    */
+  private val FloorMaxBytesPerCore: Long = 64L * 1024 * 1024
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

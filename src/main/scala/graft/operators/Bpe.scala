@@ -121,7 +121,7 @@ object Bpe {
     * (eager — plan truncates to a leaf, materialized rows replace the
     * replay), so per-step work is ≤ N replays over the vocab table and
     * total work stays LINEAR in merges for fixed N (measured: see
-    * SCALING.md's BpeScale rows at 64→1024 merges).
+    * SCALING.md's "BPE merge learning" rows at 64→1024 merges).
     */
   def learnMerges(docs: DataFrame, textCol: String, numMerges: Int,
                   checkpointEvery: Int = 32): DataFrame = {

@@ -871,7 +871,8 @@ object Dedup {
     *    no band count sheds it.
     *
     * Estimates are raw (pre-compression) like the cosine family's; the
-    * wire carries lz4 — `DedupTune` records the measured ratio.
+    * wire carries lz4 — SCALING.md's "Budget dials for the
+    * MinHash/SimHash families" records the measured ratio.
     */
   def minhashBandExchangeBytes(n: Long, bands: Int, avgShingles: Double,
                                expectedPairsPerDoc: Double = 1.0): Long = {

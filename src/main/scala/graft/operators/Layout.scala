@@ -78,8 +78,8 @@ object Layout {
     * for real. The row-level filter is still applied (file stats only
     * bound, never decide rows), so the result is ALWAYS identical to
     * `spark.read.parquet(dir).filter(...)` on any layout — pruning can
-    * only change which files are opened (spec'd on all three ZOrderPrune
-    * layouts).
+    * only change which files are opened (spec'd on all three
+    * ZOrderPruneSpec layouts).
     *
     * Scale shape: the footer pass is O(#files) driver metadata I/O —
     * exactly the planning pass every lakehouse scan planner runs; at

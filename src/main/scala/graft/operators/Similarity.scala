@@ -1213,7 +1213,7 @@ object Similarity {
       // cover), so the same nSub·kPerSub code budget spends its
       // resolution where the routing already localized the vector — a
       // recall lift at IDENTICAL index bytes (A/B'd in IvfPqSpec and
-      // the IvfPqTune decade rows). Same map-side shape: cell + residual
+      // SCALING.md's "Residual IVF-PQ" sections). Same map-side shape: cell + residual
       // are one projection against the centroid literal; the CELL comes
       // from the original unit vector, codes from the residual. The
       // argmax honors the literal budget (broadcast past it); the
@@ -1309,7 +1309,7 @@ object Similarity {
     * codes), and the exact re-rank pins quality to the shortlist's
     * recall. q104 ([[pqTopK]]) stays the SQL-replayable flat-ADC twin;
     * this path is spec-gated by recall floor (IvfPqSpec) and measured
-    * by [[graft.tools.IvfPqTune]] (SCALING.md decade rows).
+    * in SCALING.md's "IVF-PQ composition" decade rows.
     */
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
                 nSub: Int = 16, kPerSub: Int = 64, candidates: Int = 100,
@@ -1623,8 +1623,8 @@ object Similarity {
     * two levels collapse to the single-level build bit-for-bit —
     * spec'd, along with survivors(twoLevel) ⊇ survivors(global brute):
     * a finer partition can only MISS cross-cell pairs, never invent
-    * drops. Measured (SemDedupScale, 200k vectors): same-shape survivor
-    * set with the build ~4× cheaper; see SCALING.md.
+    * drops. Measured at 200k vectors: same-shape survivor set with the
+    * build ~4× cheaper (SCALING.md, "Two-level quantizer build").
     */
   def semanticDedupTwoLevel(corpus: DataFrame, dim: Int, threshold: Double,
                             targetCellSize: Int = 512,

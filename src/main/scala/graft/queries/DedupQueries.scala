@@ -29,14 +29,11 @@ private[queries] trait DedupQueries {
     * every consumer's plan to a row replay. Bounded: every call site
     * passes a relation whose width is fixed (few longs per row) and
     * whose row count is corpus-sublinear or corpus-linear × small
-    * constant — never payload bytes. SPARK_GRAFT_MAT_SHARED=0 restores
-    * the lazy plan for A/B measurement. The eager checkpoint runs a job
+    * constant — never payload bytes. The eager checkpoint runs a job
     * when the DataFrame is built, so its callers (q123, q126, q137)
     * execute even when they are only planned or explained.
     */
-  private def matSharedLeg(df: DataFrame): DataFrame =
-    if (sys.env.getOrElse("SPARK_GRAFT_MAT_SHARED", "1") == "0") df
-    else df.localCheckpoint(true)
+  private def matSharedLeg(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
 
   def dedupExact(s: SparkSession, dir: String): DataFrame =
@@ -264,7 +261,7 @@ private[queries] trait DedupQueries {
 
   /** q143's input builder: q128's content-hash split (valid excluded so
     * the overlap reads train-vs-test contamination) × distinct-ready
-    * bigram-shingle hashes. Shared with `DecontamScale`. */
+    * bigram-shingle hashes. */
   private[graft] def splitShingleHashes(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.graft.TextHashExpressions
     val bucket = TextHashExpressions.fnv64(col("text"))
@@ -280,8 +277,8 @@ private[queries] trait DedupQueries {
 
   /** [[kmvOverlap]]'s core over any (split ∈ {train, test}, hu) frame —
     * exposed for the spec's planted-overlap fixtures. Carries the exact
-    * gate columns; [[kmvOverlapSketch]] is the production (sketch-only)
-    * form the `DecontamScale` A/B measures. */
+    * gate columns; the sketch-only form's A/B is SCALING.md's
+    * "KMV overlap vs the exact legs at scale" section. */
   private[graft] def kmvOverlapOf(sh: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.graft.SketchAggregates
     val sk = sh.groupBy(col("split"))
@@ -300,20 +297,6 @@ private[queries] trait DedupQueries {
       .select(col("n_train_exact"), col("n_test_exact"),
         col("n_intersect_exact"), col("n_union_kmv"),
         col("n_intersect_kmv"), col("jaccard_kmv_ppm"))
-  }
-
-  /** The production path: estimates only, no exact legs — the whole
-    * query is one shingle-mass aggregate pass plus arithmetic on two
-    * ≤ k-long arrays. */
-  private[graft] def kmvOverlapSketch(sh: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.graft.SketchAggregates
-    val sk = sh.groupBy(col("split"))
-      .agg(SketchAggregates.kmvHashes(col("hu"), k).as("mins"))
-    val train = sk.filter(col("split") === "train").select(col("mins").as("a"))
-    val test = sk.filter(col("split") === "test").select(col("mins").as("b"))
-    combineKmvSketches(train.crossJoin(test), k)
-      .select(col("n_union_kmv"), col("n_intersect_kmv"),
-        col("jaccard_kmv_ppm"))
   }
 
   /** Combined-sketch arithmetic over a frame carrying k-min arrays `a`

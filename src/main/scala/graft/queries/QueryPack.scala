@@ -194,6 +194,7 @@ object QueryPack
     "q132_mutual_knn",
     // its curation composition rides the same fixed-cell twin graph;
     // the production composition (mutualKnnGraphAuto + CC + curation)
-    // is GraphCurationSpec-gated and measured in KnnGraphScale
+    // is GraphCurationSpec-gated and measured in SCALING.md's
+    // "Mutual-kNN graph" section
     "q142_graph_curation")
 }

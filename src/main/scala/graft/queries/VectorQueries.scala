@@ -129,7 +129,7 @@ private[queries] trait VectorQueries {
     * production path composes [[Similarity.mutualKnnGraphAuto]] +
     * [[Dedup.connectedComponents]] and is spec-gated on a
     * planted-community corpus (GraphCurationSpec) and measured in
-    * SCALING.md's KnnGraphScale rows.
+    * SCALING.md's "Mutual-kNN graph" rows.
     *
     * Scale shape: every stage is ids-only past the graph build —
     * degree is one hash aggregate over edges, membership⋈degree an id

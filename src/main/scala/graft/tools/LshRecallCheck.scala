@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.Tables
 import graft.operators.Dedup
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Engine-side closure of q20's sf1 verification gap: the DuckDB twin's
@@ -43,16 +43,7 @@ object LshRecallCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val threshold = if (args.length > 1) args(1).toDouble else 0.7
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.queryPack("graft-lsh-recall")
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     val t0 = System.nanoTime()
     val (l, e, fp, recall) = q20VsExact(docs, threshold)

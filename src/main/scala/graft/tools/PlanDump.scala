@@ -1,14 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for every declared query to a directory
   * (default plans/r14), one `<query>_<suffix>.txt` per query — the
   * judge-checkable plan evidence for the optimization rounds.
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> [q1,q2,...]
-  * Sessions mirror Bench's config (shuffle partitions from
-  * SPARK_GRAFT_CPUS, AQE on, ANSI off, nanos-as-long) so the dumped
+  * The session is Bench's ([[graft.Sessions.queryPack]]), so the dumped
   * initial plans match what the bench executes.
   */
 object PlanDump {
@@ -17,20 +14,8 @@ object PlanDump {
     val suffix = if (args.length > 1) args(1) else "before"
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .getOrCreate()
+    val spark = graft.Sessions.queryPack("graft-plandump")
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val qs = graft.queries.QueryPack.all.toSeq.sortBy(_._1)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Corpus scale-up: replicate an sf directory N× with key shifting, for
@@ -148,15 +148,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, factorS) = args.take(3)
     val factor = factorS.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.queryPack("graft-scaleup")
 
     // optional 4th arg: comma-separated table subset (e.g. "embeddings"
     // for the 2M-vector semantic-dedup campaign — replicating 60M

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.operators.{Dedup, Sessionize, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Streaming throughput measurement over the graft-synth DSv2 source —
@@ -79,20 +78,10 @@ object StreamBench {
     val retentionSeconds = if (args.length > 3) args(3).toLong else 600L
     val only: Set[String] =
       if (args.length > 4) args(4).split(",").map(_.trim).toSet else Set.empty
-    val rocksDb = graft.streaming.StreamingJobBase.envFlag("GRAFT_ROCKSDB_STATE")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.streaming.StreamingJobBase.rocksDbStateConfs(rocksDb)
-      .foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.codegen.hugeMethodLimit", "8000")) {
-        case (b, (k, v)) => b.config(k, v)
-      }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val rocksDb = graft.Sessions.rocksDbState(sys.env)
+    val cpus = graft.Sessions.cpus(sys.env).toString
+    val spark = graft.Sessions.queryPack("graft-streambench")
+    graft.Sessions.rocksDbStateConfs(rocksDb).foreach { case (k, v) => spark.conf.set(k, v) }
     import spark.implicits._
 
     def source() = spark.readStream.format("graft-synth")

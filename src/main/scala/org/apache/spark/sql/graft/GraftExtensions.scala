@@ -1,5 +1,9 @@
-/* org.apache.spark.sql placement for the private[sql] Column bridge —
- * see EnvelopeExpressions.scala. */
+/* Lives under org.apache.spark.sql to reach private[sql] bridges
+ * (ExpressionUtils, sessionState) — the same placement trick the
+ * reference uses for its metrics source (reference:
+ * src/main/scala/org/apache/spark/metrics/source/custom/AccumulatorMetricsSource.scala:4-6).
+ * Every file in this package sits here for that reason.
+ */
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.SparkSessionExtensions
@@ -10,8 +14,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * SQL by name. Activate per cluster with
   * `spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`
   * (or `.withExtensions(new GraftExtensions)` on a builder) — after
-  * which `SELECT fnv64(text), simhash64(hashes), array_dot(a, b),
-  * envelope_field(value, 'docType')` parse like built-ins, so pure-SQL
+  * which `SELECT fnv64(text), simhash64(hashes), array_dot(a, b)`
+  * parse like built-ins, so pure-SQL
   * clients (thriftserver, notebooks) reach the same operators as the
   * Column API.
   */
@@ -110,7 +114,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(two("array_dot")(ArrayDotProduct))
     ext.injectFunction(two("cell_argmax")(CellArgmax))
     ext.injectFunction(two("sorted_intersect_count")(SortedIntersectCount))
-    ext.injectFunction(two("envelope_field")(EnvelopeField))
     ext.injectFunction(hyperplaneBuilder)
     ext.injectFunction(shingleBuilder)
     ext.injectFunction(minhashBuilder)

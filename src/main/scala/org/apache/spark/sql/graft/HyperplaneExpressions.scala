@@ -1,5 +1,5 @@
 /* org.apache.spark.sql placement for the private[sql] Column bridge —
- * see EnvelopeExpressions.scala. */
+ * see GraftExtensions.scala. */
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column

@@ -1,6 +1,6 @@
 /* org.apache.spark.sql placement: the rule pattern-matches engine
  * expressions and Catalyst internals — same placement rationale as
- * EnvelopeExpressions.scala. */
+ * GraftExtensions.scala. */
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.expressions.{ArrayContains, ArrayDistinct, ArrayIntersect, Coalesce, Expression, Literal, Size}

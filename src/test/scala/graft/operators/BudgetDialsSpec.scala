@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * is exact under both, so scheme choice is pure bytes routing); the
   * MinHash clamp only ever sheds OR-amplification (clamped output ⊆
   * full output). Byte calibration against a task-metrics listener is
-  * `graft.tools.DedupTune`'s (SCALING.md).
+  * in SCALING.md's "Budget dials for the MinHash/SimHash families".
   */
 class BudgetDialsSpec extends AnyFunSuite with SparkTest {
 

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * The recall floor here runs at the suite-feasible 2000-vector corpus;
   * the scale evidence (200k decade row, query wall sublinear in n) is
-  * `graft.tools.IvfPqTune`'s — recorded in SCALING.md, same split as
+  * in SCALING.md's "IVF-PQ composition" section, same split as
   * the IVF and budget-LSH campaigns.
   */
 class IvfPqSpec extends AnyFunSuite with SparkTest {

@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * sample must hold downstream ANN recall at parity with full-corpus
   * training (≥ 0.99 of the full-trained recall — the scale-path
   * criterion), while the full corpus is only ever scanned ONCE for the
-  * final assignment. The 2M-vector build-wall evidence is
-  * `graft.tools.IvfTune`'s (SCALING.md); this pins the semantics at
+  * final assignment. The 2M-vector build-wall evidence is in
+  * SCALING.md ("Sample-trained k-means"); this pins the semantics at
   * suite scale.
   */
 class KMeansSampleSpec extends AnyFunSuite with SparkTest {

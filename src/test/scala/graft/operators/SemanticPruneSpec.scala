@@ -155,7 +155,8 @@ class SemanticPruneSpec extends AnyFunSuite with SparkTest {
     // can only come from the quantizer splitting a near-identical pair
     // across cells, which bounded-size k-means should essentially never
     // do at these distances. Mirrors the q80 planted-pair pattern and
-    // the SemDedupScale `planted` mode run at 200k/2M in SCALING.md.
+    // the planted-recall runs at 200k/2M in SCALING.md ("Semantic dedup
+    // in its DESIGNED regime").
     import graft.functions.{TextFunctions, VectorFunctions}
     val corpus = graft.Tables.embeddings(spark, sfDir)
       .select($"vec_id", $"embedding")

@@ -12,8 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * readable with strictly fewer files — and strictly fewer materialized
   * rows at the executed parquet scan — than a single-column sort, for a
   * predicate on the SECOND dimension (the case a single-column sort
-  * cannot prune at all). The sf10 numbers live in SCALING.md via
-  * `graft.tools.ZOrderPrune`; this spec gates the mechanism.
+  * cannot prune at all). The sf10 numbers live in SCALING.md's
+  * "Z-order pruning payoff, measured"; this spec gates the mechanism.
   */
 class ZOrderPruneSpec extends AnyFunSuite with SparkTest {
 

@@ -186,7 +186,7 @@ class StreamingSemanticsSpec extends AnyFunSuite with SparkTest {
     import java.nio.file.Files
     import java.sql.Timestamp
     import spark.implicits._
-    val confs = StreamingJobBase.rocksDbStateConfs(enabled = true)
+    val confs = graft.Sessions.rocksDbStateConfs(enabled = true)
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       val srcDir = Files.createTempDirectory("graft-rdb-src").toString
