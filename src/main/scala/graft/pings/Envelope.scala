@@ -41,8 +41,9 @@ final case class Envelope(
 }
 
 object Envelope {
-  /** Decode or throw (callers wrap in the lenient flatMap try/catch,
-    * mirroring the reference's drop-on-parse-error behavior —
+  /** Decode or throw (the jobs decode through
+    * `graft.streaming.EnvelopeDecode`, which drops on error unless
+    * `raiseOnError`, as the reference does —
     * ErrorAggregatorBase.scala:229-236).
     */
   def parseFrom(bytes: Array[Byte]): Envelope = {

@@ -5,7 +5,6 @@ import graft.sinks.{BatchHttpSink, HttpSink}
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 import scala.collection.immutable.ListMap
-import scala.util.control.NonFatal
 
 /** Crash-ping → monitoring-line pipelines (reference:
   * src/main/scala/com/mozilla/telemetry/streaming/CrashPingStreamingBase.scala:172-225
@@ -64,11 +63,8 @@ trait CrashPingStreamBase extends Serializable {
                      appNames: List[String] = defaultAppNames,
                      signatureProvider: Option[Envelope => Option[String]] = None): Dataset[String] = {
     import pings.sparkSession.implicits._
-    pings.flatMap { v =>
-      try parsePing(Envelope.parseFrom(v.getAs[Array[Byte]](0)), channels, appNames,
-        measurementName, signatureProvider)
-      catch { case NonFatal(_) if !raiseOnError => None }
-    }
+    EnvelopeDecode(pings, raiseOnError)(
+      parsePing(_, channels, appNames, measurementName, signatureProvider))
   }
 }
 

@@ -7,7 +7,6 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 
 import java.sql.Timestamp
-import scala.util.control.NonFatal
 
 /** Error-aggregates pipeline: binary envelopes → parse/validate/fan-out →
   * 5-minute event-time windows → multi-column SUM, composed over
@@ -119,11 +118,10 @@ abstract class ErrorAggregatorBase extends Serializable {
     buildId
   }
 
-  /** Decode + allow-list validation + per-doctype dispatch
+  /** Allow-list validation + per-doctype dispatch
     * (reference: ErrorAggregatorBase.scala:89-129).
     */
-  private[streaming] def parseEnvelope(bytes: Array[Byte]): Array[Row] = {
-    val env = Envelope.parseFrom(bytes)
+  private[streaming] def parseEnvelope(env: Envelope): Array[Row] = {
     val docType = env.fieldString("docType").getOrElse("")
     if (!allowedDocTypes.contains(docType)) {
       throw new IllegalArgumentException(s"Doctype should be one of ${allowedDocTypes.mkString(",")}")
@@ -155,11 +153,7 @@ abstract class ErrorAggregatorBase extends Serializable {
 
   /** envelopes(value: binary) → windowed aggregate. */
   def aggregate(pings: DataFrame, raiseOnError: Boolean = false): DataFrame = {
-    val encoder = Encoders.row(mergedSchema)
-    val parsed = pings.flatMap { v =>
-      try parseEnvelope(v.getAs[Array[Byte]](0))
-      catch { case NonFatal(_) if !raiseOnError => Array.empty[Row] }
-    }(encoder)
+    val parsed = EnvelopeDecode(pings, raiseOnError)(parseEnvelope)(Encoders.row(mergedSchema))
 
     val dimensionsCols = List(
       window(col("timestamp"), "5 minutes").as("window"),

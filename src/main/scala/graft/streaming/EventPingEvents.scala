@@ -3,8 +3,6 @@ package graft.streaming
 import graft.pings.{Envelope, EventPing}
 import org.apache.spark.sql.{DataFrame, Dataset}
 
-import scala.util.control.NonFatal
-
 /** Event-ping explode: one typed output row per event per process
   * (reference: src/main/scala/com/mozilla/telemetry/streaming/EventPingEvents.scala:107-148).
   *
@@ -26,47 +24,45 @@ object EventPingEvents {
       event_method: String, event_object: String, event_string_value: Option[String],
       event_map_values: Option[Map[String, String]], event_process: String)
 
-  def explodeEvents(messages: DataFrame): Dataset[EventRow] = {
-    import messages.sparkSession.implicits._
-    messages.flatMap { v =>
-      try {
-        val env = Envelope.parseFrom(v.getAs[Array[Byte]](0))
-        if (!env.fieldString("docType").exists(allowedDocTypes.contains)) Seq.empty[EventRow]
-        else {
-          val ping = EventPing.fromEnvelope(env)
-          ping.processEventMap.toSeq.flatMap { case (process, events) =>
-            events.map { e =>
-              EventRow(
-                document_id = ping.meta.documentId.get,
-                client_id = ping.meta.clientId.get,
-                normalized_channel = ping.meta.normalizedChannel,
-                country = ping.meta.geoCountry.getOrElse(""),
-                locale = ping.getLocale,
-                app_name = ping.meta.appName,
-                app_version = ping.meta.appVersion.getOrElse(""),
-                os = ping.getOsName,
-                os_version = ping.getOsVersion,
-                session_id = ping.sessionId.getOrElse(""),
-                subsession_id = ping.subsessionId.getOrElse(""),
-                session_start_time = ping.sessionStart,
-                timestamp = (ping.meta.timestamp / 1e9).toLong,
-                sample_id = ping.meta.stringSampleId,
-                experiments = ping.getMSStyleExperiments,
-                event_timestamp = e.timestamp,
-                event_category = e.category,
-                event_method = e.method,
-                event_object = e.obj,
-                event_string_value = e.value,
-                // stringify map values (SPARK-23251 workaround in the
-                // reference; harmless normalization here)
-                event_map_values = e.extra,
-                event_process = process)
-            }
-          }
+  /** One row per event per process of an allow-listed event ping. */
+  private[streaming] def eventRows(env: Envelope): Seq[EventRow] =
+    if (!env.fieldString("docType").exists(allowedDocTypes.contains)) Seq.empty
+    else {
+      val ping = EventPing.fromEnvelope(env)
+      ping.processEventMap.toSeq.flatMap { case (process, events) =>
+        events.map { e =>
+          EventRow(
+            document_id = ping.meta.documentId.get,
+            client_id = ping.meta.clientId.get,
+            normalized_channel = ping.meta.normalizedChannel,
+            country = ping.meta.geoCountry.getOrElse(""),
+            locale = ping.getLocale,
+            app_name = ping.meta.appName,
+            app_version = ping.meta.appVersion.getOrElse(""),
+            os = ping.getOsName,
+            os_version = ping.getOsVersion,
+            session_id = ping.sessionId.getOrElse(""),
+            subsession_id = ping.subsessionId.getOrElse(""),
+            session_start_time = ping.sessionStart,
+            timestamp = (ping.meta.timestamp / 1e9).toLong,
+            sample_id = ping.meta.stringSampleId,
+            experiments = ping.getMSStyleExperiments,
+            event_timestamp = e.timestamp,
+            event_category = e.category,
+            event_method = e.method,
+            event_object = e.obj,
+            event_string_value = e.value,
+            // stringify map values (SPARK-23251 workaround in the
+            // reference; harmless normalization here)
+            event_map_values = e.extra,
+            event_process = process)
         }
-      } catch {
-        case NonFatal(_) => Seq.empty[EventRow]
       }
     }
+
+  /** Always lenient, as the reference job is. */
+  def explodeEvents(messages: DataFrame): Dataset[EventRow] = {
+    import messages.sparkSession.implicits._
+    EnvelopeDecode(messages, raiseOnError = false)(eventRows)
   }
 }

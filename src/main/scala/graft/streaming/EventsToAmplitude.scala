@@ -5,8 +5,6 @@ import graft.pings.Envelope
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.{DataFrame, Dataset}
 
-import scala.util.control.NonFatal
-
 /** Config-driven event forwarding (reference:
   * src/main/scala/com/mozilla/telemetry/streaming/EventsToAmplitude.scala:146-181).
   *
@@ -32,10 +30,7 @@ object EventsToAmplitude {
   def getEvents(config: AmplitudeConfig, pings: DataFrame, sample: Double,
                 raiseOnError: Boolean): Dataset[KeyedAmplitudePayload] = {
     import pings.sparkSession.implicits._
-    pings.flatMap { v =>
-      try parsePing(Envelope.parseFrom(v.getAs[Array[Byte]](0)), sample, config)
-      catch { case NonFatal(_) if !raiseOnError => Seq.empty[KeyedAmplitudePayload] }
-    }
+    EnvelopeDecode(pings, raiseOnError)(parsePing(_, sample, config))
   }
 
   /** Streaming shape: events keyed by client, ready for

@@ -5,7 +5,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import java.sql.Timestamp
-import scala.util.control.NonFatal
 
 /** Experiment enrollment/unenrollment counts per 5-minute window —
   * normandy events from main + event pings, conditional `count(when(...))`
@@ -25,8 +24,12 @@ object ExperimentEnrollmentsAggregator {
       timestamp: Timestamp,
       submission_date_s3: String)
 
-  private[streaming] def extractEnrollmentEvents(bytes: Array[Byte]): Seq[ExperimentEnrollmentEvent] = {
-    val env = Envelope.parseFrom(bytes)
+  /** Method → count column of [[aggregate]]; TestTube extends it. */
+  private[streaming] val Methods = Seq(
+    "enroll" -> "enroll_count",
+    "unenroll" -> "unenroll_count")
+
+  private[streaming] def extractEnrollmentEvents(env: Envelope): Seq[ExperimentEnrollmentEvent] = {
     val docType = env.fieldString("docType").getOrElse("")
     if (!allowedDocTypes.contains(docType) ||
         !env.fieldString("appName").exists(allowedAppNames.contains)) {
@@ -49,20 +52,22 @@ object ExperimentEnrollmentsAggregator {
   }
 
   /** envelopes → windowed enrollment counts; batch and streaming. */
-  def aggregate(messages: DataFrame): DataFrame = {
+  def aggregate(messages: DataFrame): DataFrame = countEnrollments(messages, Methods)
+
+  /** Always-lenient decode, then one `count(when(method = m))` column
+    * per `methods` entry, in order, per 5-minute window.
+    */
+  private[streaming] def countEnrollments(messages: DataFrame, methods: Seq[(String, String)]): DataFrame = {
     import messages.sparkSession.implicits._
-    val events = messages.flatMap { v =>
-      try extractEnrollmentEvents(v.getAs[Array[Byte]](0))
-      catch { case NonFatal(_) => Seq.empty[ExperimentEnrollmentEvent] }
+    val countCols = methods.map { case (method, alias) =>
+      count(when($"method" === method, 1)).alias(alias)
     }
-    events
+    EnvelopeDecode(messages, raiseOnError = false)(extractEnrollmentEvents)
       .withWatermark("timestamp", "1 minute")
       .groupBy(
         window($"timestamp", "5 minutes").as("window"),
         $"object", $"experiment_id", $"branch_id", $"submission_date_s3")
-      .agg(
-        count(when($"method" === "enroll", 1)).alias("enroll_count"),
-        count(when($"method" === "unenroll", 1)).alias("unenroll_count"))
+      .agg(countCols.head, countCols.tail: _*)
       .withColumn("window_start", $"window.start")
       .withColumn("window_end", $"window.end")
       .drop("window")

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 import java.sql.Timestamp
-import scala.util.control.NonFatal
 
 /** Injectable processing-time clock (reference keeps the same seam for
   * testability — FederatedLearningSearchOptimizer.scala:77).
@@ -36,30 +35,28 @@ object FrecencyAggregator {
 
   val NumberOfWeights = 22
 
+  /** The ping's update, stamped with processing time, if it is a
+    * submitting ping of `modelBranch` that displayed suggestions.
+    */
+  private[streaming] def frecencyUpdate(env: Envelope, modelBranch: String,
+                                        clock: GraftClock): Option[FrecencyUpdate] =
+    if (!env.fieldString("docType").contains("frecency-update")) None
+    else {
+      val ping = FrecencyUpdatePing.fromEnvelope(env)
+      val keep = ping.studyVariation.startsWith(modelBranch) &&
+        !ping.studyVariation.contains("not-submitting") &&
+        ping.bookmarkAndHistoryNumSuggestionsDisplayed > -1
+      if (keep)
+        Some(FrecencyUpdate(new Timestamp(clock.millis()), ping.modelVersion,
+          ping.loss, ping.update, ping.meta.clientId))
+      else None
+    }
+
   def aggregate(pings: DataFrame, modelBranch: String, clock: GraftClock,
                 windowOffsetMin: Int = 28, raiseOnError: Boolean = false): Dataset[FrecencyUpdateAggregate] = {
     import pings.sparkSession.implicits._
 
-    val updates: Dataset[FrecencyUpdate] = pings.flatMap { v =>
-      try {
-        val env = Envelope.parseFrom(v.getAs[Array[Byte]](0))
-        if (!env.fieldString("docType").contains("frecency-update")) None
-        else {
-          val ping = FrecencyUpdatePing.fromEnvelope(env)
-          val keep = ping.studyVariation.startsWith(modelBranch) &&
-            !ping.studyVariation.contains("not-submitting") &&
-            ping.bookmarkAndHistoryNumSuggestionsDisplayed > -1
-          if (keep)
-            Some(FrecencyUpdate(new Timestamp(clock.millis()), ping.modelVersion,
-              ping.loss, ping.update, ping.meta.clientId))
-          else None
-        }
-      } catch {
-        case NonFatal(_) if !raiseOnError => None
-      }
-    }
-
-    updates
+    EnvelopeDecode(pings, raiseOnError)(frecencyUpdate(_, modelBranch, clock))
       .withWatermark("ts", "0 minutes")
       .groupBy(
         window($"ts", "30 minutes", "30 minutes", s"$windowOffsetMin minutes"),

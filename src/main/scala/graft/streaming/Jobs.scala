@@ -1,7 +1,9 @@
 package graft.streaming
 
 import graft.sources.EnvelopeStore
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, date_format, from_unixtime, lit}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import StreamingJobBase.{JobOpts, TelemetryKafkaTopic}
 
@@ -41,190 +43,148 @@ object Jobs {
       .load()
       .select("value")
 
-  /** The post-source streaming DAG exactly as the job mains run it
-    * (aggregate → repartition(1) → partitioned parquet + checkpoint),
-    * with the SOURCE injected: the mains pass [[kafkaStream]]; specs
-    * pass a DSv2 `graft-synth`-derived envelope stream and drive the
-    * REAL job wiring end-to-end — including checkpoint restart — which
-    * a broker-less environment can't do through the Kafka format.
-    * Returns the started query (the mains await; specs pump and stop).
+  /** A job main: parse the CLI, build the job session, run the job; a
+    * batch run stops its session when the last day is written.
     */
-  private[streaming] def startStreamingQuery(
-      job: StreamingJobBase,
-      opts: JobOpts,
-      transform: DataFrame => DataFrame,
-      partitionColumns: Seq[String],
-      source: DataFrame): org.apache.spark.sql.streaming.StreamingQuery = {
-    val outputPath = opts.getOrElse("outputPath", "/tmp/parquet")
-    transform(source)
-      .repartition(1)
-      .writeStream
-      .queryName(job.QueryName)
-      .format("parquet")
-      .option("path", s"$outputPath/${job.outputPrefix}")
-      .option("checkpointLocation", opts.checkpointPath)
-      .partitionBy(partitionColumns: _*)
-      .start()
+  private def jobMain(args: Array[String], jobName: String, appName: String)(
+      run: (SparkSession, JobOpts) => Unit): Unit = {
+    val opts = StreamingJobBase.parseOpts(jobName, args)
+    val spark = StreamingJobBase.buildSession(appName)
+    run(spark, opts)
+    if (!opts.isStreaming) spark.stop()
   }
 
-  /** Shared dual-mode driver: `transform` is the pipeline's aggregate,
-    * applied unchanged in both modes. Batch mode reads only the
-    * `docTypes` × `appNames` directories of each day: the store's
-    * partition values are the same envelope fields the transform's
-    * allow-list checks, so the output is the same, and envelopes the
-    * transform would drop are never read or decoded. The transform keeps
-    * its own checks for the Kafka path, which has no partitions.
+  /** The batch day loop: `run` gets each day from `--from` to `--to` with
+    * only that day's `docTypes` × `appNames` directories of the store
+    * (an empty list reads every value). The store's partition values
+    * are the same envelope fields the jobs' allow-lists check, so the
+    * output is the same, and envelopes a job would drop are never read
+    * or decoded. The jobs keep their own checks for the Kafka path,
+    * which has no partitions.
     */
-  private def runDualMode(
-      job: StreamingJobBase,
-      opts: JobOpts,
-      spark: SparkSession,
-      transform: DataFrame => DataFrame,
-      partitionColumns: Seq[String],
-      consumerCacheCapacity: Int,
-      docTypes: Seq[String],
-      appNames: Seq[String]): Unit = {
-    val outputPath = opts.getOrElse("outputPath", "/tmp/parquet")
-    if (opts.isStreaming) {
-      startStreamingQuery(job, opts, transform, partitionColumns,
-        kafkaStream(spark, opts, consumerCacheCapacity))
-        .awaitTermination()
-    } else {
-      val envelopeDir = opts.get("envelopeDir")
-        .getOrElse(throw new IllegalArgumentException("--envelopeDir required in batch mode"))
-      job.datesBetween(opts.from.get, opts.to).foreach { date =>
-        val pings = EnvelopeStore.read(spark, envelopeDir,
-          submissionDate = Some(date), docTypes = docTypes, appNames = appNames)
-        transform(pings)
-          .repartition(opts.numParquetFiles)
-          .write
-          .mode("overwrite")
-          .partitionBy(partitionColumns: _*)
-          .parquet(s"$outputPath/${job.outputPrefix}")
-      }
+  private def forEachDay(spark: SparkSession, opts: JobOpts, docTypes: Seq[String],
+                         appNames: Seq[String] = Nil)(run: (String, DataFrame) => Unit): Unit = {
+    val envelopeDir = opts.get("envelopeDir")
+      .getOrElse(throw new IllegalArgumentException("--envelopeDir required in batch mode"))
+    StreamingJobBase.datesBetween(opts.from.get, opts.to).foreach { day =>
+      run(day, EnvelopeStore.read(spark, envelopeDir,
+        submissionDate = Some(day), docTypes = docTypes, appNames = appNames))
     }
+  }
+
+  /** Sets the job's checkpoint and starts its query. */
+  private def start(opts: JobOpts, writer: DataStreamWriter[_]): StreamingQuery =
+    writer.option("checkpointLocation", opts.checkpointPath).start()
+
+  /** The end of every streaming main: start the query and serve it. */
+  private def runStream(opts: JobOpts, writer: DataStreamWriter[_]): Unit =
+    start(opts, writer).awaitTermination()
+
+  /** A dual-mode job writing partitioned parquet under
+    * `outputPath/prefix`: the same transform streams from Kafka
+    * (`repartition(1)`, checkpointed) or backfills one day at a time.
+    */
+  sealed abstract class ParquetJob(jobName: String, appName: String, prefix: String,
+                                   partitionColumns: Seq[String], consumerCacheCapacity: Int,
+                                   docTypes: Seq[String], appNames: Seq[String]) {
+    /** The job's rows from a frame of envelopes, in either mode. */
+    protected def rows(opts: JobOpts, envelopes: DataFrame): DataFrame
+
+    /** The streamed rows, with their partition columns. */
+    protected def streamRows(opts: JobOpts, envelopes: DataFrame): DataFrame = rows(opts, envelopes)
+
+    /** Writes one backfilled day. */
+    protected def writeDay(opts: JobOpts, day: String, rows: DataFrame): Unit =
+      rows.repartition(opts.numParquetFiles)
+        .write
+        .mode("overwrite")
+        .partitionBy(partitionColumns: _*)
+        .parquet(path(opts))
+
+    protected def path(opts: JobOpts): String =
+      s"${opts.getOrElse("outputPath", "/tmp/parquet")}/$prefix"
+
+    def main(args: Array[String]): Unit = jobMain(args, jobName, appName)(run)
+
+    def run(spark: SparkSession, opts: JobOpts): Unit =
+      if (opts.isStreaming) runStream(opts, sink(opts, kafkaStream(spark, opts, consumerCacheCapacity)))
+      else forEachDay(spark, opts, docTypes, appNames)((day, pings) => writeDay(opts, day, rows(opts, pings)))
+
+    /** The streaming job over an injected source: the mains pass
+      * [[kafkaStream]]; specs pass a `graft-synth` or `MemoryStream`
+      * envelope stream and drive the real job wiring end to end
+      * (including checkpoint restart), which a broker-less environment
+      * can't do through the Kafka format. Specs pump and stop the query.
+      */
+    private[streaming] def startWithSource(opts: JobOpts, source: DataFrame): StreamingQuery =
+      start(opts, sink(opts, source))
+
+    private def sink(opts: JobOpts, source: DataFrame): DataStreamWriter[Row] =
+      streamRows(opts, source)
+        .repartition(1)
+        .writeStream
+        .queryName("main_query")
+        .format("parquet")
+        .option("path", path(opts))
+        .partitionBy(partitionColumns: _*)
   }
 
   /** Error aggregates job (reference job #1). */
-  object ErrorAggregatorJob {
-    def main(args: Array[String]): Unit = {
-      val opts = StreamingJobBase.parseOpts("error_aggregator", args)
-      val spark = ErrorAggregatorJobDef.buildSession("Error Aggregates")
-      run(spark, opts)
-      if (!opts.isStreaming) spark.stop()
-    }
-    def run(spark: SparkSession, opts: JobOpts): Unit =
-      runDualMode(ErrorAggregatorJobDef, opts, spark,
-        df => ErrorAggregator.aggregate(df, opts.raiseOnError),
-        Seq("submission_date_s3"), consumerCacheCapacity = 1000,
-        ErrorAggregator.allowedDocTypes, ErrorAggregator.allowedAppNames)
-    /** The real streaming job (same transform, sink, partitioning, and
-      * checkpoint wiring as [[run]]'s streaming branch) over an injected
-      * source — see [[Jobs.startStreamingQuery]].
-      */
-    private[streaming] def startWithSource(
-        opts: JobOpts, source: DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
-      startStreamingQuery(ErrorAggregatorJobDef, opts,
-        df => ErrorAggregator.aggregate(df, opts.raiseOnError),
-        Seq("submission_date_s3"), source)
-  }
-  private object ErrorAggregatorJobDef extends StreamingJobBase {
-    override val JobName = "error_aggregator"
-    override val outputPrefix = "error_aggregator/v2"
+  object ErrorAggregatorJob extends ParquetJob("error_aggregator", "Error Aggregates",
+      "error_aggregator/v2", Seq("submission_date_s3"), consumerCacheCapacity = 1000,
+      ErrorAggregator.allowedDocTypes, ErrorAggregator.allowedAppNames) {
+    protected def rows(opts: JobOpts, envelopes: DataFrame): DataFrame =
+      ErrorAggregator.aggregate(envelopes, opts.raiseOnError)
   }
 
   /** Event-ping explode job (reference job #6). */
-  object EventPingEventsJob {
-    def main(args: Array[String]): Unit = {
-      val opts = StreamingJobBase.parseOpts("event_ping_events", args)
-      val spark = EventPingEventsJobDef.buildSession("Event Ping Events")
-      run(spark, opts)
-      if (!opts.isStreaming) spark.stop()
-    }
-    def run(spark: SparkSession, opts: JobOpts): Unit = {
-      val maxRecords = opts.getOrElse("max-records-per-file", "10000000")
-      if (opts.isStreaming) {
-        import org.apache.spark.sql.functions.lit
-        EventPingEvents.explodeEvents(kafkaStream(spark, opts, consumerCacheCapacity = 10))
-          .withColumn("submission_date_s3",
-            org.apache.spark.sql.functions.date_format(
-              org.apache.spark.sql.functions.from_unixtime(org.apache.spark.sql.functions.col("timestamp")), "yyyyMMdd"))
-          .withColumn("doc_type", lit("event"))
-          .repartition(1)
-          .writeStream
-          .queryName(EventPingEventsJobDef.QueryName)
-          .format("parquet")
-          .option("path", s"${opts.getOrElse("outputPath", "/tmp/parquet")}/${EventPingEventsJobDef.outputPrefix}")
-          .option("checkpointLocation", opts.checkpointPath)
-          .partitionBy("submission_date_s3", "doc_type")
-          .start()
-          .awaitTermination()
-      } else {
-        val envelopeDir = opts.get("envelopeDir")
-          .getOrElse(throw new IllegalArgumentException("--envelopeDir required in batch mode"))
-        EventPingEventsJobDef.datesBetween(opts.from.get, opts.to).foreach { date =>
-          val pings = EnvelopeStore.read(spark, envelopeDir,
-            submissionDate = Some(date), docTypes = Seq("event"), appNames = Seq("Firefox"))
-          // manual partition dir in the path + maxRecordsPerFile, as the
-          // reference does (EventPingEvents.scala:95-101)
-          EventPingEvents.explodeEvents(pings)
-            .write
-            .option("maxRecordsPerFile", maxRecords)
-            .mode("overwrite")
-            .parquet(s"${opts.getOrElse("outputPath", "/tmp/parquet")}/${EventPingEventsJobDef.outputPrefix}/submission_date_s3=$date/doc_type=event")
-        }
-      }
-    }
-  }
-  private object EventPingEventsJobDef extends StreamingJobBase {
-    override val JobName = "event_ping_events"
-    override val outputPrefix = "events/v1"
+  object EventPingEventsJob extends ParquetJob("event_ping_events", "Event Ping Events",
+      "events/v1", Seq("submission_date_s3", "doc_type"), consumerCacheCapacity = 10,
+      Seq("event"), Seq("Firefox")) {
+    protected def rows(opts: JobOpts, envelopes: DataFrame): DataFrame =
+      EventPingEvents.explodeEvents(envelopes).toDF()
+
+    override protected def streamRows(opts: JobOpts, envelopes: DataFrame): DataFrame =
+      rows(opts, envelopes)
+        .withColumn("submission_date_s3", date_format(from_unixtime(col("timestamp")), "yyyyMMdd"))
+        .withColumn("doc_type", lit("event"))
+
+    // manual partition dir in the path + maxRecordsPerFile, as the
+    // reference does (EventPingEvents.scala:95-101)
+    override protected def writeDay(opts: JobOpts, day: String, rows: DataFrame): Unit =
+      rows.write
+        .option("maxRecordsPerFile", opts.getOrElse("max-records-per-file", "10000000"))
+        .mode("overwrite")
+        .parquet(s"${path(opts)}/submission_date_s3=$day/doc_type=event")
   }
 
   /** Enrollment aggregates job (reference job #7). */
-  object ExperimentEnrollmentsJob {
-    def main(args: Array[String]): Unit = {
-      val opts = StreamingJobBase.parseOpts("experiment_enrollments_aggregator", args)
-      val spark = EnrollmentsJobDef.buildSession("Experiment Enrollments Aggregates")
-      run(spark, opts)
-      if (!opts.isStreaming) spark.stop()
-    }
-    def run(spark: SparkSession, opts: JobOpts): Unit =
-      runDualMode(EnrollmentsJobDef, opts, spark,
-        df => ExperimentEnrollmentsAggregator.aggregate(df),
-        Seq("submission_date_s3"), consumerCacheCapacity = 100,
-        ExperimentEnrollmentsAggregator.allowedDocTypes, ExperimentEnrollmentsAggregator.allowedAppNames)
-  }
-  private object EnrollmentsJobDef extends StreamingJobBase {
-    override val JobName = "experiment_enrollments_aggregator"
-    override val outputPrefix = "experiment_enrollments/v1"
+  object ExperimentEnrollmentsJob extends ParquetJob("experiment_enrollments_aggregator",
+      "Experiment Enrollments Aggregates", "experiment_enrollments/v1", Seq("submission_date_s3"),
+      consumerCacheCapacity = 100,
+      ExperimentEnrollmentsAggregator.allowedDocTypes, ExperimentEnrollmentsAggregator.allowedAppNames) {
+    protected def rows(opts: JobOpts, envelopes: DataFrame): DataFrame =
+      ExperimentEnrollmentsAggregator.aggregate(envelopes)
   }
 
   /** Enrollment aggregates → TestTube HTTP (reference job #8). */
   object ExperimentEnrollmentsToTestTubeJob {
-    def main(args: Array[String]): Unit = {
-      val opts = StreamingJobBase.parseOpts("experiment_enrollments_to_testtube", args)
-      val spark = TestTubeJobDef.buildSession("Experiment Enrollments To TestTube")
-      run(spark, opts)
-    }
+    def main(args: Array[String]): Unit =
+      jobMain(args, "experiment_enrollments_to_testtube", "Experiment Enrollments To TestTube")(run(_, _))
     def run(spark: SparkSession, opts: JobOpts,
             sinkFactory: String => graft.sinks.TestTubeHttpSink =
               url => new graft.sinks.TestTubeHttpSink(url)): Unit = {
       val url = opts.getOrElse("url", "http://localhost/testtube")
-      ExperimentEnrollmentsToTestTube.sinkRows(kafkaStream(spark, opts, 100))
+      runStream(opts, ExperimentEnrollmentsToTestTube.sinkRows(kafkaStream(spark, opts, 100))
         .writeStream
-        .queryName(TestTubeJobDef.QueryName)
-        .option("checkpointLocation", opts.checkpointPath)
-        .foreach(sinkFactory(url))
-        .start()
-        .awaitTermination()
+        .queryName("main_query")
+        .foreach(sinkFactory(url)))
     }
   }
-  private object TestTubeJobDef extends StreamingJobBase {
-    override val JobName = "experiment_enrollments_to_testtube"
-  }
 
-  /** Crash pings → Influx/OpenTSDB lines over HTTP (reference jobs #3/#4). */
+  /** Crash pings → Influx/OpenTSDB lines over HTTP (reference jobs
+    * #3/#4). `jobName` is unused: `opts` already carries the job's name.
+    */
   def runCrashJob(pipeline: CrashPingStreamBase, jobName: String,
                   spark: SparkSession, opts: JobOpts): Unit = {
     val url = opts.getOrElse("url", "http://localhost/write")
@@ -232,19 +192,11 @@ object Jobs {
     val batchSize = opts.getOrElse("httpBatchSize", "1").toInt
     val maxParallel = opts.getOrElse("maxParallelRequests", "100").toInt
     if (opts.isStreaming) {
-      pipeline.getParsedPings(kafkaStream(spark, opts, 100), opts.raiseOnError, measurement)
+      runStream(opts, pipeline.getParsedPings(kafkaStream(spark, opts, 100), opts.raiseOnError, measurement)
         .writeStream
-        .option("checkpointLocation", opts.checkpointPath)
-        .foreach(pipeline.getHttpSink(url, batchSize))
-        .start()
-        .awaitTermination()
+        .foreach(pipeline.getHttpSink(url, batchSize)))
     } else {
-      val envelopeDir = opts.get("envelopeDir")
-        .getOrElse(throw new IllegalArgumentException("--envelopeDir required in batch mode"))
-      val base = new StreamingJobBase { override val JobName = jobName }
-      base.datesBetween(opts.from.get, opts.to).foreach { date =>
-        val pings = EnvelopeStore.read(spark, envelopeDir,
-          submissionDate = Some(date), docTypes = Seq("crash"))
+      forEachDay(spark, opts, docTypes = Seq("crash")) { (_, pings) =>
         pipeline.getParsedPings(pings, opts.raiseOnError, measurement)
           .repartition(maxParallel)
           .foreachPartition { partition: Iterator[String] =>
@@ -257,52 +209,38 @@ object Jobs {
   }
 
   object CrashesToInfluxJob {
-    def main(args: Array[String]): Unit = {
-      val opts = StreamingJobBase.parseOpts("crashes_to_influx", args)
-      runCrashJob(CrashesToInflux, "crashes_to_influx",
-        new StreamingJobBase { override val JobName = "crashes_to_influx" }
-          .buildSession("CrashesToInflux"), opts)
-    }
+    def main(args: Array[String]): Unit =
+      jobMain(args, "crashes_to_influx", "CrashesToInflux")(
+        runCrashJob(CrashesToInflux, "crashes_to_influx", _, _))
   }
 
   object CrashesToOpenTsdbJob {
-    def main(args: Array[String]): Unit = {
-      val opts = StreamingJobBase.parseOpts("crashes_to_opentsdb", args)
-      runCrashJob(CrashesToOpenTsdb, "crashes_to_opentsdb",
-        new StreamingJobBase { override val JobName = "crashes_to_opentsdb" }
-          .buildSession("CrashesToOpenTsdb"), opts)
-    }
+    def main(args: Array[String]): Unit =
+      jobMain(args, "crashes_to_opentsdb", "CrashesToOpenTsdb")(
+        runCrashJob(CrashesToOpenTsdb, "crashes_to_opentsdb", _, _))
   }
 
   /** Uptake events → DogStatsD UDP (reference job #9). */
   object UptakeEventsToDatadogJob {
-    def main(args: Array[String]): Unit = {
-      val opts = StreamingJobBase.parseOpts("uptake_events_to_datadog", args)
-      val spark = new StreamingJobBase { override val JobName = "uptake_events_to_datadog" }
-        .buildSession("UptakeEventsToDatadog")
-      val host = opts.getOrElse("statsdHost", "localhost")
-      val port = opts.getOrElse("statsdPort", "8125").toInt
-      UptakeEventsToDatadog.eventsToMetrics(kafkaStream(spark, opts, 100), opts.raiseOnError)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", opts.checkpointPath)
-        .foreach(new graft.sinks.DogStatsDMetricSink(host, port))
-        .start()
-        .awaitTermination()
-    }
+    def main(args: Array[String]): Unit =
+      jobMain(args, "uptake_events_to_datadog", "UptakeEventsToDatadog") { (spark, opts) =>
+        val host = opts.getOrElse("statsdHost", "localhost")
+        val port = opts.getOrElse("statsdPort", "8125").toInt
+        runStream(opts, UptakeEventsToDatadog.eventsToMetrics(kafkaStream(spark, opts, 100), opts.raiseOnError)
+          .writeStream
+          .outputMode("append")
+          .foreach(new graft.sinks.DogStatsDMetricSink(host, port)))
+      }
   }
 
   /** Config-driven events → Amplitude (reference job #5). */
   object EventsToAmplitudeJob {
-    def main(args: Array[String]): Unit = {
-      val opts = StreamingJobBase.parseOpts("events_to_amplitude", args)
-      val spark = new StreamingJobBase { override val JobName = "events_to_amplitude" }
-        .buildSession("EventsToAmplitude")
-      val apiKey = sys.env.getOrElse("AMPLITUDE_API_KEY",
-        throw new IllegalArgumentException("AMPLITUDE_API_KEY not set"))
-      run(spark, opts, apiKey)
-      if (!opts.isStreaming) spark.stop()
-    }
+    def main(args: Array[String]): Unit =
+      jobMain(args, "events_to_amplitude", "EventsToAmplitude") { (spark, opts) =>
+        val apiKey = sys.env.getOrElse("AMPLITUDE_API_KEY",
+          throw new IllegalArgumentException("AMPLITUDE_API_KEY not set"))
+        run(spark, opts, apiKey)
+      }
     def run(spark: SparkSession, opts: JobOpts, apiKey: String,
             sinkFactory: (String, String) => graft.sinks.AmplitudeHttpSink =
               (key, url) => graft.sinks.AmplitudeHttpSink(key, url)): Unit = {
@@ -312,26 +250,16 @@ object Jobs {
       val sample = opts.getOrElse("sample", "1.0").toDouble
       require(sample > 0.0 && sample <= 1.0, "sample must be in (0, 1]")
       if (opts.isStreaming) {
-        EventsToAmplitude.streamingEvents(config, kafkaStream(spark, opts, 1000),
+        runStream(opts, EventsToAmplitude.streamingEvents(config, kafkaStream(spark, opts, 1000),
           sample, opts.raiseOnError)
           .writeStream
-          .option("checkpointLocation", opts.checkpointPath)
-          .foreach(sinkFactory(apiKey, url))
-          .start()
-          .awaitTermination()
+          .foreach(sinkFactory(apiKey, url)))
       } else {
-        import org.apache.spark.sql.functions.col
-        val envelopeDir = opts.get("envelopeDir")
-          .getOrElse(throw new IllegalArgumentException("--envelopeDir required in batch mode"))
         val maxParallel = opts.getOrElse("maxParallelRequests", "100").toInt
         val minDelay = opts.getOrElse("minDelay", "0").toInt
-        val base = new StreamingJobBase { override val JobName = "events_to_amplitude" }
-        base.datesBetween(opts.from.get, opts.to).foreach { date =>
-          // config filters fold into the pruned store scan
-          val pings = EnvelopeStore.read(spark, envelopeDir,
-            submissionDate = Some(date),
-            docTypes = config.filters.getOrElse("docType", Nil),
-            appNames = config.filters.getOrElse("appName", Nil))
+        // config filters fold into the pruned store scan
+        forEachDay(spark, opts, config.filters.getOrElse("docType", Nil),
+            config.filters.getOrElse("appName", Nil)) { (_, pings) =>
           EventsToAmplitude.getEvents(config, pings, sample, opts.raiseOnError)
             .repartition(maxParallel, col("clientId"))
             .foreachPartition {
@@ -348,27 +276,23 @@ object Jobs {
     * (reference job #10), wired as foreachBatch.
     */
   object FederatedLearningJob {
-    def main(args: Array[String]): Unit = {
-      val opts = StreamingJobBase.parseOpts("federated_learning_search_optimizer", args)
-      val spark = new StreamingJobBase { override val JobName = "federated_learning_search_optimizer" }
-        .buildSession("FederatedLearningSearchOptimizer")
-      val sink = new graft.learning.FederatedLearningSink(
-        opts.getOrElse("modelOutputPath", "/tmp/frecency-model"),
-        opts.getOrElse("stateCheckpointPath", "/tmp/frecency-state"),
-        opts.get("stateBootstrapFilePath"))
-      FrecencyAggregator.aggregate(
-          kafkaStream(spark, opts, 100).toDF(),
-          opts.getOrElse("modelBranch", "model1"),
-          SystemClock,
-          opts.getOrElse("windowOffsetMin", "28").toInt,
-          opts.raiseOnError)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", opts.checkpointPath)
-        .foreachBatch((ds: org.apache.spark.sql.Dataset[FrecencyUpdateAggregate], id: Long) =>
-          sink.addBatch(ds, id))
-        .start()
-        .awaitTermination()
-    }
+    def main(args: Array[String]): Unit =
+      jobMain(args, "federated_learning_search_optimizer", "FederatedLearningSearchOptimizer") {
+        (spark, opts) =>
+          val sink = new graft.learning.FederatedLearningSink(
+            opts.getOrElse("modelOutputPath", "/tmp/frecency-model"),
+            opts.getOrElse("stateCheckpointPath", "/tmp/frecency-state"),
+            opts.get("stateBootstrapFilePath"))
+          runStream(opts, FrecencyAggregator.aggregate(
+              kafkaStream(spark, opts, 100).toDF(),
+              opts.getOrElse("modelBranch", "model1"),
+              SystemClock,
+              opts.getOrElse("windowOffsetMin", "28").toInt,
+              opts.raiseOnError)
+            .writeStream
+            .outputMode("append")
+            .foreachBatch((ds: org.apache.spark.sql.Dataset[FrecencyUpdateAggregate], id: Long) =>
+              sink.addBatch(ds, id)))
+      }
   }
 }

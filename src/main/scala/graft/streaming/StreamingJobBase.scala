@@ -1,66 +1,57 @@
 package graft.streaming
 
 import graft.Sessions
+import graft.pings.Meta
 import org.apache.spark.sql.SparkSession
 
-import java.sql.Timestamp
-import java.time.format.DateTimeFormatter
 import java.time.temporal.ChronoUnit
-import java.time.{Clock, Instant, LocalDate, ZoneOffset}
+import java.time.{LocalDate, ZoneOffset}
 
-/** Shared job scaffolding: CLI options, date-range expansion, date
-  * formatting, session construction (reference:
+/** A named job with the job session (reference:
   * src/main/scala/com/mozilla/telemetry/streaming/StreamingJobBase.scala:18-107).
-  * Option parsing is hand-rolled `--key value` (no CLI library resolves
-  * in this environment — SURVEY.md §7.1).
+  * The job mains in [[Jobs]] build their sessions through the companion.
   */
 abstract class StreamingJobBase extends Serializable {
 
-  val QueryName: String = "main_query"
   val JobName: String
-  val outputPrefix: String = ""
-  val clock: Clock = Clock.systemUTC()
 
-  /** Dates `from`..`to` inclusive as yyyyMMdd strings; `to` defaults to
-    * yesterday (reference: StreamingJobBase.scala:45-54).
-    */
-  def datesBetween(from: String, to: Option[String]): Seq[String] = {
-    val parsedFrom = LocalDate.parse(from, StreamingJobBase.DateFormatter)
-    val parsedTo = to match {
-      case Some(t) => LocalDate.parse(t, StreamingJobBase.DateFormatter)
-      case None    => LocalDate.now(clock).minusDays(1)
-    }
-    (0L to ChronoUnit.DAYS.between(parsedFrom, parsedTo)).map { offset =>
-      parsedFrom.plusDays(offset).format(StreamingJobBase.DateFormatter)
-    }
-  }
+  def buildSession(appName: String, master: String = "local[*]"): SparkSession =
+    StreamingJobBase.buildSession(appName, master)
+}
 
-  def timestampToDateString(ts: Timestamp): String =
-    Instant.ofEpochMilli(ts.getTime).atZone(ZoneOffset.UTC)
-      .toLocalDate.format(StreamingJobBase.DateFormatter)
+/** Shared job scaffolding: CLI options, date-range expansion, session
+  * construction. Option parsing is hand-rolled `--key value` (no CLI
+  * library resolves in this environment — SURVEY.md §7.1).
+  */
+object StreamingJobBase {
+  val TelemetryKafkaTopic = "telemetry"
 
   /** Job session: [[graft.Sessions.job]]'s recipe (graceful shutdown,
     * dynamic partition overwrite — ErrorAggregatorBase.scala:202-208).
     *
-    * `rocksDbState` (default: the `GRAFT_ROCKSDB_STATE` env var, so a
-    * fleet can flip without code changes) swaps the streaming state
-    * store to RocksDB, for state that outgrows executor heap (dedup
-    * sets, session maps, join buffers).
+    * The `GRAFT_ROCKSDB_STATE` env var (so a fleet can flip without
+    * code changes) swaps the streaming state store to RocksDB, for state
+    * that outgrows executor heap (dedup sets, session maps, join buffers).
     */
-  def buildSession(
-      appName: String,
-      master: String = "local[*]",
-      rocksDbState: Boolean = Sessions.rocksDbState(sys.env)): SparkSession =
-    Sessions.job(appName, master, rocksDbState)
-}
+  def buildSession(appName: String, master: String = "local[*]"): SparkSession =
+    Sessions.job(appName, master, Sessions.rocksDbState(sys.env))
 
-object StreamingJobBase {
-  val DateFormat = "yyyyMMdd"
-  val DateFormatter: DateTimeFormatter = DateTimeFormatter.ofPattern(DateFormat)
-  val TelemetryKafkaTopic = "telemetry"
+  /** Dates `from`..`to` inclusive as yyyyMMdd strings; `to` defaults to
+    * yesterday, UTC (reference: StreamingJobBase.scala:45-54).
+    */
+  def datesBetween(from: String, to: Option[String]): Seq[String] = {
+    val parsedFrom = LocalDate.parse(from, Meta.DateFormatter)
+    val parsedTo = to match {
+      case Some(t) => LocalDate.parse(t, Meta.DateFormatter)
+      case None    => LocalDate.now(ZoneOffset.UTC).minusDays(1)
+    }
+    (0L to ChronoUnit.DAYS.between(parsedFrom, parsedTo)).map { offset =>
+      parsedFrom.plusDays(offset).format(Meta.DateFormatter)
+    }
+  }
 
   /** `--key value` / `--flag` parser with the reference's base options
-    * (kafkaBroker, startingOffsets, checkpointPath, from, to, fileLimit).
+    * (kafkaBroker, startingOffsets, checkpointPath, from, to).
     * Streaming vs batch mode = exactly one of kafkaBroker | from
     * (reference: BaseOpts requireOne, StreamingJobBase.scala:63-92).
     */
@@ -74,7 +65,6 @@ object StreamingJobBase {
     def checkpointPath: String = getOrElse("checkpointPath", s"/tmp/checkpoints/$jobName")
     def from: Option[String] = get("from")
     def to: Option[String] = get("to")
-    def fileLimit: Option[Int] = get("fileLimit").map(_.toInt)
     def raiseOnError: Boolean = flag("raiseOnError")
     def numParquetFiles: Int = getOrElse("numParquetFiles", "60").toInt
 

@@ -4,8 +4,6 @@ import graft.SparkTest
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import scala.jdk.CollectionConverters._
-
 /** The DSv2 synthetic micro-batch source end-to-end: determinism,
   * offset bookkeeping across restart, and event-time integration.
   */
@@ -54,37 +52,6 @@ class SynthStreamSourceSpec extends AnyFunSuite with SparkTest {
     val offsets = spark.read.parquet(outDir).select($"offset")
       .as[Long].collect().sorted.toSeq
     assert(offsets == (0L until 40L), s"gaps/dups after restart: $offsets")
-  }
-
-  test("DSv2 loop: graft-synth through graft-http across restart, no loss, no dups") {
-    // the two V2 surfaces composed: deterministic source offsets +
-    // executor-side HTTP delivery, stopped and resumed mid-stream
-    import graft.sinks.{HttpRequestSpec, HttpResponseSpec, HttpStreamingSinkV2, HttpTransport}
-    val transport = new HttpTransport {
-      val bodies = new java.util.concurrent.CopyOnWriteArrayList[String]()
-      override def send(req: HttpRequestSpec, ct: Int, rt: Int): HttpResponseSpec = {
-        req.body.foreach(bodies.add)
-        HttpResponseSpec(200, "ok")
-      }
-    }
-    HttpStreamingSinkV2.registerTransport("rec-loop", transport)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-loop-ckpt").toString
-    def run(maxRows: Int): Unit = {
-      val q = spark.readStream.format("graft-synth")
-        .option("rowsPerBatch", "5").option("maxRows", maxRows.toString)
-        .load()
-        .selectExpr("CAST(offset AS STRING) AS value")
-        .writeStream.format("graft-http")
-        .option("url", "http://ingest.test/loop")
-        .option("transport", "rec-loop").option("batchRows", "3")
-        .option("checkpointLocation", ckpt)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    run(10); run(20)
-    val delivered = transport.bodies.asScala.flatMap(_.split("\n")).map(_.toLong).toList
-    assert(delivered.sorted == (0L until 20L).toList,
-      s"loss or duplication across restart: ${delivered.sorted}")
   }
 
   test("graft-synth honors ReadLimit.maxRows admission hints (min with rowsPerBatch)") {

@@ -9,6 +9,7 @@ import graft.sources.EnvelopeStore
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -210,6 +211,41 @@ class JobsSpec extends AnyFunSuite with SparkTest {
     }
   }
 
+  test("event-ping STREAMING job writes rows per process under date and doc_type partitions") {
+    // The job's streaming branch (explode, partition columns from the
+    // event timestamp, repartition(1), partitioned parquet + checkpoint)
+    // over an injected source in place of Kafka.
+    import spark.implicits._
+    implicit val sqlContext: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val outDir = Files.createTempDirectory("events-stream-out").toString
+    val opts = StreamingJobBase.parseOpts("event_ping_events", Array(
+      "--kafkaBroker", "unused:9092", // streaming mode; source injected below
+      "--checkpointPath", Files.createTempDirectory("events-stream-ckpt").toString,
+      "--outputPath", outDir))
+    val input = MemoryStream[Array[Byte]]
+    val q = Jobs.EventPingEventsJob.startWithSource(opts, input.toDF())
+    try {
+      val nextDay = TestMessages.TestTimestampNano + 86400L * 1000000000L
+      input.addData((TestMessages.eventMessages(5) ++ TestMessages.crashMessages(2) ++
+        TestMessages.eventMessages(2, timestamp = nextDay)).map(_.toBytes))
+      q.processAllAvailable()
+    } finally q.stop()
+    val out = spark.read.parquet(s"$outDir/events/v1")
+    assert(out.columns.count(c => c == "submission_date_s3" || c == "doc_type") == 2)
+    // each event ping carries 3 parent events and 1 dynamic event; the
+    // crash pings are dropped
+    val counts = out
+      .groupBy($"submission_date_s3".cast("string"), $"doc_type", $"event_process").count()
+      .as[(String, String, String, Long)].collect().toSet
+    assert(counts == Set(
+      ("20160407", "event", "parent", 15L), ("20160407", "event", "dynamic", 5L),
+      ("20160408", "event", "parent", 6L), ("20160408", "event", "dynamic", 2L)), counts)
+    // one file per partition directory per trigger: the stream is repartitioned to one writer
+    val files = out.inputFiles.map(f => f.substring(0, f.lastIndexOf('/')))
+    assert(files.length == 2 && files.distinct.length == 2, files.toSeq)
+    assert(files.forall(_.contains("/doc_type=event")), files.toSeq)
+  }
+
   test("opts parser enforces streaming xor batch") {
     intercept[IllegalArgumentException](StreamingJobBase.parseOpts("x", Array.empty))
     intercept[IllegalArgumentException](
@@ -220,8 +256,7 @@ class JobsSpec extends AnyFunSuite with SparkTest {
   }
 
   test("datesBetween expands inclusive ranges") {
-    val job = new StreamingJobBase { override val JobName = "t" }
-    assert(job.datesBetween("20170130", Some("20170202")) ==
+    assert(StreamingJobBase.datesBetween("20170130", Some("20170202")) ==
       Seq("20170130", "20170131", "20170201", "20170202"))
   }
 
