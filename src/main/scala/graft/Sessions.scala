@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.{ForkFreeLocalFileSystem, ForkFreeLocalFs}
 import org.apache.spark.sql.SparkSession
 
 import scala.util.Try
@@ -30,6 +31,19 @@ import scala.util.Try
   */
 object Sessions {
 
+  /** `file:` without fork/exec, for both Hadoop APIs
+    * ([[graft.sources.ForkFreeLocalFileSystem]]): FileSystem for scans
+    * and writes, FileContext for Spark's streaming checkpoints. Without
+    * libhadoop, Hadoop's own local filesystem starts a `chmod` per file
+    * create and mkdir and two `readlink`s per FileContext rename: ~130
+    * process starts per trigger of the error-aggregates stream, which
+    * made up most of its state commit and driver-side log writes.
+    * Same bytes, permission bits and file statuses.
+    */
+  val LocalFsConfs: Seq[(String, String)] = Seq(
+    "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName)
+
   /** Confs every session carries. */
   private val Base: Seq[(String, String)] = Seq(
     "spark.sql.session.timeZone" -> "UTC",
@@ -41,7 +55,8 @@ object Sessions {
     // stalls on the widest codegen stages (cube/rollup + decimal sums).
     // Below the limit Spark falls back to the still-compiled non-codegen
     // path: slightly slower best case, no interpreter cliff.
-    "spark.sql.codegen.hugeMethodLimit" -> "8000")
+    "spark.sql.codegen.hugeMethodLimit" -> "8000") ++
+    LocalFsConfs
 
   /** What opening one file is worth in scan splitting, in bytes of
     * input. Spark packs files into splits of at most

@@ -44,11 +44,16 @@ object Jobs {
       .select("value")
 
   /** A job main: parse the CLI, build the job session, run the job; a
-    * batch run stops its session when the last day is written.
+    * batch run stops its session when the last day is written. A
+    * `streamingOnly` job has no batch branch, so `--from` is a usage
+    * error, raised before any session is built.
     */
-  private def jobMain(args: Array[String], jobName: String, appName: String)(
+  private def jobMain(args: Array[String], jobName: String, appName: String,
+                      streamingOnly: Boolean = false)(
       run: (SparkSession, JobOpts) => Unit): Unit = {
     val opts = StreamingJobBase.parseOpts(jobName, args)
+    require(opts.isStreaming || !streamingOnly,
+      s"$jobName runs only as a stream: use --kafkaBroker, not --from")
     val spark = StreamingJobBase.buildSession(appName)
     run(spark, opts)
     if (!opts.isStreaming) spark.stop()
@@ -170,7 +175,8 @@ object Jobs {
   /** Enrollment aggregates → TestTube HTTP (reference job #8). */
   object ExperimentEnrollmentsToTestTubeJob {
     def main(args: Array[String]): Unit =
-      jobMain(args, "experiment_enrollments_to_testtube", "Experiment Enrollments To TestTube")(run(_, _))
+      jobMain(args, "experiment_enrollments_to_testtube", "Experiment Enrollments To TestTube",
+        streamingOnly = true)(run(_, _))
     def run(spark: SparkSession, opts: JobOpts,
             sinkFactory: String => graft.sinks.TestTubeHttpSink =
               url => new graft.sinks.TestTubeHttpSink(url)): Unit = {
@@ -223,7 +229,8 @@ object Jobs {
   /** Uptake events → DogStatsD UDP (reference job #9). */
   object UptakeEventsToDatadogJob {
     def main(args: Array[String]): Unit =
-      jobMain(args, "uptake_events_to_datadog", "UptakeEventsToDatadog") { (spark, opts) =>
+      jobMain(args, "uptake_events_to_datadog", "UptakeEventsToDatadog",
+          streamingOnly = true) { (spark, opts) =>
         val host = opts.getOrElse("statsdHost", "localhost")
         val port = opts.getOrElse("statsdPort", "8125").toInt
         runStream(opts, UptakeEventsToDatadog.eventsToMetrics(kafkaStream(spark, opts, 100), opts.raiseOnError)
@@ -277,7 +284,8 @@ object Jobs {
     */
   object FederatedLearningJob {
     def main(args: Array[String]): Unit =
-      jobMain(args, "federated_learning_search_optimizer", "FederatedLearningSearchOptimizer") {
+      jobMain(args, "federated_learning_search_optimizer", "FederatedLearningSearchOptimizer",
+          streamingOnly = true) {
         (spark, opts) =>
           val sink = new graft.learning.FederatedLearningSink(
             opts.getOrElse("modelOutputPath", "/tmp/frecency-model"),

@@ -24,6 +24,8 @@ class SessionsSpec extends AnyFunSuite {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.ansi.enabled" -> "false",
       "spark.sql.codegen.hugeMethodLimit" -> "8000",
+      "spark.hadoop.fs.file.impl" -> "graft.sources.ForkFreeLocalFileSystem",
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.sources.ForkFreeLocalFs",
       "spark.sql.shuffle.partitions" -> "3",
       "spark.ui.enabled" -> "false",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
@@ -40,8 +42,10 @@ class SessionsSpec extends AnyFunSuite {
       "spark.sql.ansi.enabled" -> "false",
       "spark.sql.codegen.hugeMethodLimit" -> "8000",
       "spark.sql.files.openCostInBytes" -> "8192")
-    assert(Sessions.jobConfs(rocksDbState = false) == six)
-    assert(Sessions.jobConfs(rocksDbState = true) == six ++ Seq(
+    def reference(rocksDbState: Boolean) =
+      Sessions.jobConfs(rocksDbState).filterNot(Sessions.LocalFsConfs.contains)
+    assert(reference(rocksDbState = false) == six)
+    assert(reference(rocksDbState = true) == six ++ Seq(
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true"))
@@ -51,6 +55,21 @@ class SessionsSpec extends AnyFunSuite {
     for (off <- Seq("0", "false", "", "no", "enabled"))
       assert(!Sessions.rocksDbState(Map("GRAFT_ROCKSDB_STATE" -> off)), off)
     assert(!Sessions.rocksDbState(Map.empty))
+  }
+
+  test("the job recipe carries the local filesystem pair after the shared confs") {
+    val shared = Seq(
+      "spark.streaming.stopGracefullyOnShutdown" -> "true",
+      "spark.sql.sources.partitionOverwriteMode" -> "dynamic",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.ansi.enabled" -> "false",
+      "spark.sql.codegen.hugeMethodLimit" -> "8000")
+    val eight = shared ++ Seq(
+      "spark.hadoop.fs.file.impl" -> "graft.sources.ForkFreeLocalFileSystem",
+      "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.sources.ForkFreeLocalFs",
+      "spark.sql.files.openCostInBytes" -> "8192")
+    assert(Sessions.jobConfs(rocksDbState = false) == eight)
+    assert(Sessions.jobConfs(rocksDbState = true).take(8) == eight)
   }
 
   test("malformed, zero or negative core and partition counts fall back to the default") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object SparkTest {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val builder = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
@@ -18,6 +18,9 @@ object SparkTest {
       // same codegen fallback regime as the Bench/Verify/job sessions,
       // so plan-pinning specs grade the plans those sessions execute
       .config("spark.sql.codegen.hugeMethodLimit", "8000")
+    // the fork-free `file:` of every src/main session, so specs write
+    // checkpoints and outputs through the same filesystem classes
+    val s = Sessions.LocalFsConfs.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -15,6 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark: SparkSession = {
+    // the shared context is always the one the test recipe builds, with
+    // its master and fork-free `file:`, whichever suite runs first
+    graft.SparkTest.spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     SparkSession.builder()

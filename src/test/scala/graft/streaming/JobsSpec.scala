@@ -255,6 +255,17 @@ class JobsSpec extends AnyFunSuite with SparkTest {
     assert(opts.checkpointPath == "/tmp/checkpoints/x")
   }
 
+  test("streaming-only mains reject --from with a usage error") {
+    val mains: Seq[(String, Array[String] => Unit)] = Seq(
+      "uptake_events_to_datadog" -> Jobs.UptakeEventsToDatadogJob.main,
+      "experiment_enrollments_to_testtube" -> Jobs.ExperimentEnrollmentsToTestTubeJob.main,
+      "federated_learning_search_optimizer" -> Jobs.FederatedLearningJob.main)
+    for ((jobName, main) <- mains) {
+      val e = intercept[IllegalArgumentException](main(Array("--from", "20170101")))
+      assert(e.getMessage.contains(s"$jobName runs only as a stream"), e.getMessage)
+    }
+  }
+
   test("datesBetween expands inclusive ranges") {
     assert(StreamingJobBase.datesBetween("20170130", Some("20170202")) ==
       Seq("20170130", "20170131", "20170201", "20170202"))
